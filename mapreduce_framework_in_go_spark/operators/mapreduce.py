@@ -179,11 +179,25 @@ def mr_run(
     deterministic under Spark task retries.
 
     Execution: Arrow-batched ``mapInPandas`` for the flatMap (one Python
-    crossing per batch, not per row), built-in hash exchange on ``key``,
-    ``applyInPandas`` per group for the reduce. At scale the exchange is
-    the only shuffle; there is no driver materialization.
+    crossing per batch, not per row), then ``collect_list`` per key —
+    map-side partial lists, one hash exchange on ``key``, one merged
+    list per key — and a ``mapInArrow`` that calls ``reduce_fn`` once per
+    key, one Python crossing per Arrow batch of keys. Each key's values
+    reach Reduce exactly once, as in Google MapReduce (OSDI 2004 §4.1).
+    There is no driver materialization.
+
+    Memory: one key's values must fit in a worker, as with any per-group
+    reduce; a reduce batch holds up to
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` keys with all their
+    values.
+
+    ``map_fn`` must emit ``str`` keys and values — the reference's
+    ``KeyValue{Key, Value string}``. Anything else (``None`` included,
+    which ``collect_list`` would silently drop) fails the map task with
+    a ``TypeError`` naming the pair.
     """
     import pandas as pd
+    import pyarrow as pa
 
     def flat_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -193,19 +207,39 @@ def mr_run(
                 for k, v in map_fn(doc, content if content is not None else ""):
                     keys.append(k)
                     vals.append(v)
+            # one C-level pass over the emitted types; the scan below runs
+            # only to name the offending pair
+            types = {*map(type, keys), *map(type, vals)}
+            if not all(issubclass(t, str) for t in types):
+                k, v = next(
+                    (k, v) for k, v in zip(keys, vals)
+                    if not (isinstance(k, str) and isinstance(v, str))
+                )
+                raise TypeError(
+                    f"Map emitted ({k!r}, {v!r}); the plugin contract is Go "
+                    "KeyValue{Key, Value string}: key and value must both be str"
+                )
             yield pd.DataFrame({"key": keys, "value": vals})
 
     pairs = docs.select(
         F.col(doc_col).cast("string").alias(doc_col), F.col(content_col)
     ).mapInPandas(flat_map, schema="key string, value string")
 
-    def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf["key"].iloc[0]
-        values = sorted(pdf["value"].tolist())
-        return pd.DataFrame({"key": [key], "value": [reduce_fn(key, values)]})
+    def reduce_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            keys = batch.column(0)
+            out = [
+                reduce_fn(k, sorted(vs))
+                for k, vs in zip(keys.to_pylist(), batch.column(1).to_pylist())
+            ]
+            yield pa.RecordBatch.from_arrays(
+                [keys, pa.array(out, pa.string())], ["key", "value"]
+            )
 
-    return pairs.groupBy("key").applyInPandas(
-        reduce_group, schema="key string, value string"
+    return (
+        pairs.groupBy("key")
+        .agg(F.collect_list("value").alias("values"))
+        .mapInArrow(reduce_batches, schema="key string, value string")
     )
 
 

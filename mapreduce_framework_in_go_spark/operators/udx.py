@@ -4,7 +4,8 @@ pandas UDAF, each oracle-checked.
 The reference's extensibility contract is the Go-plugin Map/Reduce pair
 (``mrapps/*.go`` loaded via ``plugin.Open``, ``mr/worker.go:30-40``);
 its Spark-native analogues are already first-class here via Arrow
-(``operators/mapreduce.py:mr_run`` = mapInPandas/applyInPandas,
+(``operators/mapreduce.py:mr_run`` = mapInPandas map, collect_list
+per key, mapInArrow reduce,
 ``operators/multimodal.py`` = mapInPandas over binary columns). This
 module completes the UDF/UDAF/UDTF trio with the two remaining API
 shapes:

@@ -33,13 +33,16 @@ def write_kv_text(
     """Write ``"key value"`` text lines.
 
     ``canonical=True`` emits one globally sorted file (the shape of the
-    reference oracle's ``mr-out-0``). At 100 TB you would never do this —
-    leave ``canonical=False`` so each task writes its own file through the
-    committer, exactly like ``mr-out-Y`` per reduce bucket.
+    reference oracle's ``mr-out-0``): one exchange into a single
+    partition, sorted there. Unlike ``orderBy``, this needs no range
+    sampling job, so the upstream is computed once; unlike ``coalesce(1)``
+    it keeps the upstream stage's parallelism. At 100 TB you would never
+    do this — leave ``canonical=False`` so each task writes its own file
+    through the committer, exactly like ``mr-out-Y`` per reduce bucket.
     """
     lines = kv_lines(df, key, value)
     if canonical:
-        lines = lines.orderBy("value").coalesce(1)
+        lines = lines.repartition(1).sortWithinPartitions("value")
     lines.write.mode("overwrite").text(path)
 
 

@@ -11,6 +11,8 @@ source for MR-style corpora.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -140,12 +142,28 @@ def scan_text_corpus(spark: SparkSession, path_glob: str) -> DataFrame:
     scales to millions of files — Spark's FileScan enumerates/packs splits
     on the driver and reads in parallel; `wholetext` keeps one record per
     file exactly like ``prepareMapInput``.
+
+    A wildcard basename (``data/pg-*.txt``) is read as its directory with
+    ``pathGlobFilter``: a glob in the load path makes FileStreamSink's
+    metadata-dir probe log a full FileNotFoundException stack at WARN on
+    every scan. Directories, literal files and wildcards in directory
+    parts load as given.
     """
+    reader = spark.read
+    head, base = os.path.split(path_glob)
+    if head and not _has_glob(head) and _has_glob(base):
+        reader = reader.option("pathGlobFilter", base)
+        path_glob = head
     return (
-        spark.read.text(path_glob, wholetext=True)
+        reader.text(path_glob, wholetext=True)
         .withColumn("doc", F.element_at(F.split(F.input_file_name(), "/"), -1))
         .select("doc", F.col("value").alias("content"))
     )
+
+
+def _has_glob(path: str) -> bool:
+    """Whether a path holds Hadoop glob syntax."""
+    return any(c in path for c in "*?[{")
 
 
 def parquet_num_rows(sf_dir: str, name: str) -> int:

@@ -2,6 +2,8 @@
 technique, main/test-mr.sh:59-67), mr_run round-trip, and rerun
 determinism (the crash test's invariant, main/test-mr.sh:194-203)."""
 
+import contextlib
+
 from pyspark.sql import functions as F
 
 from mapreduce_framework_in_go_spark.operators import mapreduce as mr
@@ -193,3 +195,159 @@ def test_mid_write_crash_discards_partial_output(spark, sf_dir, tmp_path):
 
     back = sorted(r["value"] for r in spark.read.text(out).collect())
     assert back == expected
+
+
+# ---------------------------------------------------------------------------
+# mr_run + canonical sink: reduce once per key, answers independent of the
+# session's physical settings, and the Map contract guard
+# ---------------------------------------------------------------------------
+
+_TINY_DOCS = [
+    ("d0", "the cat sat on the mat"),
+    ("d1", "The dog -- the end."),
+    ("d2", "été é éa Éb zed Zed"),
+    ("d3", "the the the"),
+    ("d4", ""),
+    ("d5", "mat, mat; cat"),
+    ("d6", "über Über the"),
+    ("d7", "a b c d e f g h i"),
+    ("d8", "the"),
+]
+
+
+def _tiny_docs(spark):
+    return spark.createDataFrame(_TINY_DOCS, "doc string, content string")
+
+
+def _tiny_oracle() -> list[str]:
+    """The sequential oracle's ``mr-out-0`` lines for wc on _TINY_DOCS."""
+    from collections import Counter
+
+    counts = Counter(k for doc, text in _TINY_DOCS for k, _ in mr.wc_map(doc, text))
+    return sorted(f"{k} {n}" for k, n in counts.items())
+
+
+def _write_canonical(df, out):
+    """Canonical ``write_kv_text``; returns (part files, their lines)."""
+    from mapreduce_framework_in_go_spark.sources.sinks import write_kv_text
+
+    write_kv_text(df, str(out), canonical=True)
+    parts = sorted(out.glob("part-*"))
+    return parts, [line for p in parts for line in p.read_text().splitlines()]
+
+
+@contextlib.contextmanager
+def _conf(spark, settings: dict[str, str]):
+    """Set session conf keys for a block, then restore them."""
+    old = {k: spark.conf.get(k) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def test_mr_run_reduces_each_key_once(spark, tmp_path):
+    """Each key reaches Reduce exactly once and a canonical write runs at
+    most 3 jobs (map stage, reduce stage, single-file write): no range
+    sample or second reduce recomputes the upstream."""
+    import uuid
+
+    sc = spark.sparkContext
+    calls = sc.accumulator(0)
+
+    def counting_reduce(key, values):
+        calls.add(1)
+        return str(len(values))
+
+    group = f"reduce-once-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "mr_run reduce-once guard")
+    try:
+        frame = mr.mr_run(
+            _tiny_docs(spark), mr.wc_map, counting_reduce, "doc", "content"
+        )
+        parts, lines = _write_canonical(frame, tmp_path / "out")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert lines == _tiny_oracle()
+    assert calls.value == len(lines)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+
+def test_mr_run_canonical_output_invariant_to_session_settings(spark, tmp_path):
+    """The same lines whatever the shuffle-partition count, with AQE off,
+    and with 7-row Arrow batches (keys and documents span several
+    batches); non-ASCII and capitalised keys land in Python sorted()
+    order, as the oracle's sort puts them."""
+    expected = _tiny_oracle()
+    assert "Éb 1" in expected and "über 1" in expected
+    settings = [
+        {},
+        {"spark.sql.shuffle.partitions": "1"},
+        {"spark.sql.shuffle.partitions": "37"},
+        {"spark.sql.adaptive.enabled": "false"},
+        {"spark.sql.execution.arrow.maxRecordsPerBatch": "7"},
+    ]
+    for i, conf in enumerate(settings):
+        with _conf(spark, conf):
+            frame = mr.mr_run(
+                _tiny_docs(spark), mr.wc_map, mr.wc_reduce, "doc", "content"
+            )
+            parts, lines = _write_canonical(frame, tmp_path / f"out{i}")
+        assert len(parts) == 1, conf
+        assert lines == expected, conf
+
+
+def test_mr_run_empty_map_writes_one_part_file(spark, tmp_path):
+    """A Map that emits nothing still yields the ``mr-out-0`` shape: one
+    (empty) part file."""
+    frame = mr.mr_run(
+        _tiny_docs(spark), lambda doc, text: (), mr.wc_reduce, "doc", "content"
+    )
+    parts, lines = _write_canonical(frame, tmp_path / "out")
+    assert len(parts) == 1
+    assert lines == []
+
+
+def test_mr_run_rejects_non_string_pairs(spark):
+    """collect_list drops nulls, so a Map emitting None (or any non-str)
+    must fail loudly, naming the plugin contract — never lose values."""
+    import pytest
+
+    def none_value(doc, text):
+        yield "k", "v"
+        yield "k", None
+
+    def int_key(doc, text):
+        yield 1, "v"
+
+    for bad in (none_value, int_key):
+        frame = mr.mr_run(_tiny_docs(spark), bad, mr.wc_reduce, "doc", "content")
+        with pytest.raises(Exception, match=r"KeyValue\{Key, Value string\}"):
+            frame.collect()
+
+
+def test_scan_text_corpus_basename_glob(spark, tmp_path):
+    """A wildcard basename reads through pathGlobFilter over its
+    directory: the same (doc, content) rows as the files the glob
+    names, and nothing else."""
+    import glob
+
+    from mapreduce_framework_in_go_spark.sources.tables import scan_text_corpus
+
+    (tmp_path / "pg-a.txt").write_text("alpha\nbeta")
+    (tmp_path / "pg-b.txt").write_text("gamma")
+    (tmp_path / "notes.md").write_text("not a book")
+    (tmp_path / "sub").mkdir()
+    (tmp_path / "sub" / "pg-c.txt").write_text("below the glob's directory")
+    pattern = str(tmp_path / "pg-*.txt")
+    expected = sorted(
+        (p.rsplit("/", 1)[-1], open(p).read()) for p in glob.glob(pattern)
+    )
+    got = sorted(tuple(r) for r in scan_text_corpus(spark, pattern).collect())
+    assert got == expected
+    whole_dir = {r["doc"] for r in scan_text_corpus(spark, str(tmp_path)).collect()}
+    assert whole_dir == {"pg-a.txt", "pg-b.txt", "notes.md"}
