@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import ARTIFACTS, GenerationSlot
 from ..functions.text import tokens_col
 from ..registry import register
 from ..sources.tables import table
@@ -57,21 +58,11 @@ BPE_MERGES = 6  # learned merge ranks (unrolled identically in the oracle)
 # consumers (next iteration + the output union); without persist each
 # consumer re-plans its whole subtree — the corpus count would run once
 # per 2^iteration branch instead of once.
-_CACHE_GENERATION: list[DataFrame] = []
-
-
-def _evict_previous_generation() -> None:
-    while _CACHE_GENERATION:
-        try:
-            _CACHE_GENERATION.pop().unpersist()
-        except Exception:
-            pass
+_CACHE_GENERATION = GenerationSlot()
 
 
 def _persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _CACHE_GENERATION.append(df)
-    return df
+    return _CACHE_GENERATION.adopt(df.persist())
 
 
 def _syms_col():
@@ -80,23 +71,21 @@ def _syms_col():
 
 # The merge table is an INDEX — a build-once tokenizer artifact (on a
 # cluster it ships with the training run and is reused until the corpus
-# changes) — so, like the trained IVF centroids
-# (similarity._TRAINED_CACHE), the final frames are memoized per
-# (applicationId, sf_dir) OUTSIDE the one-generation cache. The win is
+# changes) — so, like the trained IVF centroids, the final frames are
+# an ARTIFACTS entry OUTSIDE the one-generation cache. The win is
 # driver-side as much as executor-side: the N-iteration lineage costs
 # seconds of Catalyst analysis per rebuild, which the memo pays once.
-# Eviction: only entries whose session is dead (their persisted blocks
-# died with the context) — never other sf_dirs of the live session.
-_ARTIFACT_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
 
 
 def _artifacts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(merges, w_final): the learned merge table (merge_rank, l, r,
     merged, pair_freq) and the final per-word symbol table, memoized."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _ARTIFACT_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return ARTIFACTS.get_or_build(
+        spark, "bpe", sf_dir, lambda: _train(spark, sf_dir)
+    )
+
+
+def _train(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     learned, w = merge_chain_from(table(spark, sf_dir, "documents"))
     merges = spark.createDataFrame(
         [
@@ -113,13 +102,6 @@ def _artifacts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     # or a direct call) evicts w0, and an unmaterialized memo would then
     # recompute the whole corpus chain on its next consumer action.
     w.count()
-    for old_key in [k for k in _ARTIFACT_CACHE if k[0] != key[0]]:
-        for df in _ARTIFACT_CACHE.pop(old_key):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    _ARTIFACT_CACHE[key] = (merges, w)
     return merges, w
 
 
@@ -169,7 +151,7 @@ def merge_chain_from(
     from that rank too); real corpora never get close (rank N needs
     only N distinct adjacent pairs).
     """
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     w = _persist(
         docs.select(F.explode(tokens_col("text")).alias("word"))
         .groupBy("word")

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import GenerationSlot
+from ..cache import ARTIFACTS, PLANS, GenerationSlot
 from ..functions.text import md5_long32, tokens_col
 from ..registry import register
 from ..sources.tables import table
@@ -54,27 +54,17 @@ LOG_SCALE = 10**9
 _NB_GENERATION = GenerationSlot()
 
 
-def _evict_nb_generation() -> None:
-    _NB_GENERATION.evict()
-
-
 def _scaled_ln(num: F.Column, den: F.Column) -> F.Column:
     return F.round(
         F.log(num.cast("double") / den.cast("double")) * F.lit(LOG_SCALE)
     ).cast("long")
 
 
-# Trained model memoized per (applicationId, dataset) and EXCLUDED
-# from the one-generation eviction — the trained-centroids precedent
-# (similarity._TRAINED_CACHE): training is deterministic, so the six
-# model consumers (four batch queries + two streaming gates) provably
-# score with ONE training run instead of retraining per invocation.
-# Every persisted frame is MATERIALIZED (count()) before caching so a
-# later generation eviction can never force a silent rebuild on the
-# next consumer action; eviction drops dead-application keys only.
-_MODEL_CACHE: dict[
-    tuple[str, str], tuple[DataFrame, DataFrame, DataFrame, DataFrame]
-] = {}
+# Trained model: an ARTIFACTS entry, EXCLUDED from the one-generation
+# eviction — the trained-centroids precedent: training is
+# deterministic, so the six model consumers (four batch queries + two
+# streaming gates) provably score with ONE training run instead of
+# retraining per invocation.
 
 
 def _model(
@@ -90,15 +80,14 @@ def _model(
     through this same function, so batch and stream provably score
     with ONE model.
     """
-    import os as _os
+    return ARTIFACTS.get_or_build(
+        spark, "nb_model", sf_dir, lambda: _train(spark, sf_dir)
+    )
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    hit = _MODEL_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for old_key in list(_MODEL_CACHE):
-        if old_key[0] != key[0]:
-            _MODEL_CACHE.pop(old_key, None)
+
+def _train(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     docs = table(spark, sf_dir, "documents")
     is_holdout = F.col("doc_id") % NB_FOLD == 0
     # column-pruned doc metadata, persisted: classes / priors /
@@ -165,7 +154,6 @@ def _model(
     meta.count()
     lik.count()
     train_counts.count()
-    _MODEL_CACHE[key] = (meta, priors, lik, train_counts)
     return meta, priors, lik, train_counts
 
 
@@ -192,7 +180,7 @@ def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     The generation slot holds only this frame now (the model frames
     are memoized outside it), so each invocation evicts the previous
     scored generation before re-persisting."""
-    _evict_nb_generation()
+    _NB_GENERATION.evict()
     meta, priors, lik, _tc = _model(spark, sf_dir)
     tok = _tok(table(spark, sf_dir, "documents"))
 
@@ -494,14 +482,13 @@ NB_MARGIN_GRID = [
     tags=["classifier", "llm-pipeline", "tuning"],
 )
 def nb_margin_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plan_cache import memo_frame
 
     # build-bound ~45% (r12 split: 1.0 s build vs 1.3 s exec at sf0.1
     # — the C-row priors collect + the fold expression trees): memoize
     # the BUILT frame per (app, dataset); the model frames it roots in
-    # are themselves memoized AND materialized (_MODEL_CACHE), so no
+    # are themselves memoized AND materialized (_model), so no
     # evictable-generation lineage hides under the memo
-    return memo_frame(
+    return PLANS.get_or_build(
         spark, "nb_margin_tuning", sf_dir, lambda: _margin_tuning_frame(spark, sf_dir)
     )
 

@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import md5_long32, shingles_col, tokens_col
 from ..functions.vectors import cosine_from_norms, l2_norm
-from ..cache import GenerationSlot
+from ..cache import ARTIFACTS, PLANS, GenerationSlot
 from ..registry import register
 from ..sources.tables import table
 
@@ -73,7 +73,7 @@ _MD5_32_SQL = "('0x' || substr(md5({0}), 1, 8))::BIGINT"
 # cached frames from the last caching dedup invocation (one generation:
 # each new invocation evicts the previous one's frames — see
 # dedup_minhash_lsh for the rationale)
-_CACHE_GENERATION: list[DataFrame] = []
+_CACHE_GENERATION = GenerationSlot()
 
 # Driver-side observability for the iterative dedup pipeline (round-9
 # verdict ask: "instrument the round count and cache hits per run").
@@ -81,16 +81,6 @@ _CACHE_GENERATION: list[DataFrame] = []
 # invocation; zero steady-state cost (a handful of dict writes on the
 # driver). Read by tests/test_components.py and scripts/probe_lsh.py.
 RUN_STATS: dict = {}
-
-
-def _evict_previous_generation() -> None:
-    """Best-effort unpersist of the previous invocation's cached frames
-    (they may belong to a stopped session)."""
-    while _CACHE_GENERATION:
-        try:
-            _CACHE_GENERATION.pop().unpersist()
-        except Exception:
-            pass
 
 def _shingles_cte(src: str = "documents") -> str:
     """CTE chain ending at ``sh(doc_id, s)`` — distinct 3-gram shingles
@@ -317,7 +307,7 @@ def _lsh_pair_frame(
     if gen is None:
         gen = _CACHE_GENERATION
     if sh is None:
-        _evict_previous_generation()
+        _CACHE_GENERATION.evict()
         RUN_STATS["lsh_shingles_built"] = RUN_STATS.get("lsh_shingles_built", 0) + 1
         sh = (
             _shingle_rows_from(docs)
@@ -507,7 +497,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without a persist the tokenize + two-groupBy signature build runs
     # twice (no ReusedExchange: the broadcast side has no shuffle to
     # match). Same one-generation cache policy as dedup_minhash_lsh.
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     sig = _simhash_sig_frame(spark, sf_dir).persist()
     _CACHE_GENERATION.append(sig)
     chunks = sig.select(
@@ -613,7 +603,7 @@ def _jaccard_inter_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix length and the length filter use t - 1e-6 to stay strictly
     lossless. Shingle rows persist one generation (they feed the df
     count, the ranking, and both sides of the verify join)."""
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     sh = _shingle_rows(spark, sf_dir).persist()
     _CACHE_GENERATION.append(sh)
     cand = _prefix_candidates(sh, JACCARD_THRESHOLD - 1e-6)
@@ -734,7 +724,7 @@ def _prefix_candidates(
     tags=["dedup"],
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     sh = _shingle_rows(spark, sf_dir).persist()
     _CACHE_GENERATION.append(sh)
     t = CONTAINMENT_THRESHOLD - 1e-6  # threshold applies to round(c, 6)
@@ -836,7 +826,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     sh = (
         _shingle_rows_from(docs)
         .withColumn("h", md5_long32(F.col("s")))
@@ -1241,12 +1231,8 @@ def dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 ASSIGN_PROBE = 5
 
 # Own generation slot for dedup_embedding_ivf's assignment frame
-# (per-slot rule — see _evict_previous_generation's cache above).
+# (per-slot rule — see _CACHE_GENERATION above).
 _EMB_IVF_GENERATION = GenerationSlot()
-
-
-def _evict_emb_ivf_generation() -> None:
-    _EMB_IVF_GENERATION.evict()
 
 
 def _emb_ivf_oracle() -> str:
@@ -1305,9 +1291,9 @@ def dedup_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # generation slot (per-slot rule, CLAUDE.md) — persisting into
     # similarity's slot would let any similarity query evict this
     # query's still-unexecuted assignment (and vice versa).
-    _evict_emb_ivf_generation()
+    _EMB_IVF_GENERATION.evict()
     assign = _nearest_cells(
-        emb, _trained_centroids(emb, cache_key=sf_dir), "vec_id", ASSIGN_PROBE
+        emb, _trained_centroids(emb, sf_dir), "vec_id", ASSIGN_PROBE
     ).persist()
     _EMB_IVF_GENERATION.append(assign)
     pa = assign.select("cell_id", F.col("vec_id").alias("vec_a"))
@@ -1482,7 +1468,7 @@ INCREMENTAL_ORACLE = f"""
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     is_delta = F.col("doc_id") % DELTA_MOD == DELTA_REM
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     sh = (
         _shingle_rows_from(docs)
         .withColumn("h", md5_long32(F.col("s")))
@@ -1571,7 +1557,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Own generation slots (per-slot rule): the delta merge persists its
 # control frames + delta sketch here, never in dedup's shared slot —
 # and each CONSUMER of clusters_delta_frame gets its own slot, because
-# both batch variants are plan-memoized (plan_cache): if they shared
+# both batch variants are plan-memoized (cache.PLANS): if they shared
 # one slot, building query B's frame would unpersist query A's
 # memoized-plan inputs, forcing silent per-consumer recomputes on A's
 # next action (the r10-advice build-then-build hazard, now structural
@@ -1580,10 +1566,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CLUSTERS_DELTA_GENERATION = GenerationSlot()
 _CLUSTERS_MERGE_GENERATION = GenerationSlot()
 _CLUSTERS_STREAM_GENERATION = GenerationSlot()
-
-
-def _evict_clusters_delta_generation() -> None:
-    _CLUSTERS_DELTA_GENERATION.evict()
 
 
 def clusters_delta_frame(
@@ -1666,7 +1648,7 @@ def clusters_delta_frame(
     Within one consumer, callers that chain merges materialize between
     entries — the streaming fold localCheckpoints each batch's labels;
     the memoized base artifact lives OUTSIDE every slot
-    (``_DELTA_LABELS_CACHE``/``_DELTA_INDEX_CACHE``), so eviction never invalidates it. Slots
+    (``cache.ARTIFACTS``), so eviction never invalidates it. Slots
     are pinned mechanically in tests/test_cache_isolation.py.
     """
     gen = gen_slot if gen_slot is not None else _CLUSTERS_DELTA_GENERATION
@@ -1975,35 +1957,13 @@ def advance_cluster_index(
     }
 
 
-# Per-(applicationId, dataset) memos of lineage-truncated artifacts —
-# the trained-IVF precedent (similarity._TRAINED_CACHE): a one-time
-# per-session artifact build (at deployment: tables on disk), living
-# OUTSIDE every generation slot. localCheckpoint, NOT persist: the
-# artifacts' plans overlap slot-persisted frames (the index sketch
-# shares its logical plan with _clusters_lsh_frame's in-slot shingle
-# frame), so Spark's CacheManager would DEDUPE the cache entries and a
-# later generation eviction would silently drop the artifact (measured
-# — the exact materialize-before-cache hazard). Checkpointing
-# truncates lineage: eviction of any slot can never reach it (pinned
-# in tests/test_cache_isolation.py). Dead-application keys are evicted
-# on access; other sf_dirs never.
-
-
-def _app_memo(cache: dict, spark: SparkSession, sf_dir: str, build):
-    """Shared memo-evict discipline for the artifact caches above."""
-    import os as _os
-
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, _os.path.abspath(sf_dir))
-    hit = cache.get(key)
-    if hit is not None:
-        return hit
-    for old_key in list(cache):
-        if old_key[0] != app_id:
-            cache.pop(old_key, None)
-    val = build()
-    cache[key] = val
-    return val
+# The delta base, standing-assignment and split-pair artifacts below
+# are per-(app, dataset) ARTIFACTS entries living OUTSIDE every
+# generation slot. localCheckpoint, NOT persist: their plans overlap
+# slot-persisted frames (the index sketch shares its logical plan with
+# _clusters_lsh_frame's in-slot shingle frame), so a persist would be
+# deduped by the CacheManager and a later slot eviction would silently
+# drop the artifact (measured; pinned in tests/test_cache_isolation.py).
 
 
 def _delta_base_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2015,8 +1975,6 @@ def _delta_base_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
 # needs only the labels; building (and checkpointing) the corpus-rep
 # sketch index for a consumer that discards it is wasted corpus-scale
 # work (r11 review finding).
-_DELTA_LABELS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_DELTA_INDEX_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
 
 
 def _delta_base_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2027,7 +1985,7 @@ def _delta_base_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
 
-    return _app_memo(_DELTA_LABELS_CACHE, spark, sf_dir, _build)
+    return ARTIFACTS.get_or_build(spark, "dedup:delta_labels", sf_dir, _build)
 
 
 def _delta_base_index(
@@ -2041,7 +1999,7 @@ def _delta_base_index(
             ).items()
         }
 
-    return _app_memo(_DELTA_INDEX_CACHE, spark, sf_dir, _build)
+    return ARTIFACTS.get_or_build(spark, "dedup:delta_index", sf_dir, _build)
 
 
 def _delta_base_artifact(
@@ -2084,7 +2042,6 @@ _CLUSTERS_DELTA_ORACLE = f"""
     tags=["dedup"],
 )
 def dedup_clusters_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plan_cache import memo_frame
 
     def _build() -> DataFrame:
         docs = table(spark, sf_dir, "documents")
@@ -2121,7 +2078,7 @@ def dedup_clusters_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # py4j tree construction + the in-build base-clustering actions):
     # memoize the BUILT frame per (app, dataset); repeats re-execute
     # the merge honestly against its slot-persisted control frames
-    return memo_frame(spark, "dedup_clusters_delta", sf_dir, _build)
+    return PLANS.get_or_build(spark, "dedup_clusters_delta", sf_dir, _build)
 
 
 @register(
@@ -2145,7 +2102,6 @@ def dedup_clusters_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_clusters_delta_merge_only(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..plan_cache import memo_frame
 
     def _build() -> DataFrame:
         docs = table(spark, sf_dir, "documents")
@@ -2164,7 +2120,7 @@ def dedup_clusters_delta_merge_only(
 
     # own slot + memoized plan: the deployment compiles the merge once
     # and runs it per increment; repeats time pure merge execution
-    return memo_frame(
+    return PLANS.get_or_build(
         spark, "dedup_clusters_delta_merge_only", sf_dir, _build
     )
 
@@ -2230,22 +2186,17 @@ def dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The standing corpus assignment (doc_id, cluster_rep) — the stored
 # label table downstream consumers JOIN (split keying, token
-# economics), exactly the artifact the delta merge maintains. Memoized
-# per (applicationId, dataset) OUTSIDE every generation slot and
-# localCheckpoint-ed, like the delta-base caches (same CacheManager-dedupe
-# hazard: the clustering's shingle frame shares logical plans with
-# slot-persisted frames, so persist() entries would be deduped and a
-# later slot eviction would silently drop the artifact).
+# economics), exactly the artifact the delta merge maintains; an
+# ARTIFACTS entry, localCheckpoint-ed like the delta base.
 # dedup_clusters_lsh itself deliberately does NOT ride this — its
 # bench row stays the honest from-scratch rebuild cost.
-_ASSIGNMENT_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def cluster_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-session standing cluster assignment ``(doc_id,
     cluster_rep)`` over the full documents table — at deployment a
     stored table maintained by the incremental merge; here built once
-    per (application, dataset) and lineage-truncated (_app_memo)."""
+    per (application, dataset) and lineage-truncated."""
 
     def _build() -> DataFrame:
         return (
@@ -2254,7 +2205,7 @@ def cluster_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
 
-    return _app_memo(_ASSIGNMENT_CACHE, spark, sf_dir, _build)
+    return ARTIFACTS.get_or_build(spark, "dedup:assignment", sf_dir, _build)
 
 
 BAND_CONFIGS = [(16, 1), (8, 2), (4, 4), (2, 8)]  # bands x rows over 16 slots
@@ -2334,7 +2285,7 @@ def _tuning_oracle() -> str:
     tags=["dedup", "metric"],
 )
 def dedup_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     sh = (
         _shingle_rows(spark, sf_dir)
         .withColumn("h", md5_long32(F.col("s")))
@@ -2484,7 +2435,7 @@ def dedup_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=["dedup", "metric"],
 )
 def dedup_simhash_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     sh = _shingle_rows(spark, sf_dir).persist()
     _CACHE_GENERATION.append(sh)
     sig = _simhash_sig_frame(spark, sf_dir).persist()
@@ -2717,22 +2668,18 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=["dedup", "sampling", "governance"],
 )
 def split_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plan_cache import memo_frame
 
     # build-bound per invocation (r12 split: 1.4 s build vs 1.5 s exec
     # at sf0.1 — the minhash-signature expression trees) AND a
     # stored-table consumer at deployment (docstring): memoize the
     # BUILT frame per (app, dataset) over the localCheckpoint-ed pair
     # artifact below.
-    return memo_frame(
+    return PLANS.get_or_build(
         spark,
         "split_decontaminate",
         sf_dir,
         lambda: _split_decontaminate_frame(spark, sf_dir),
     )
-
-
-_SPLIT_PAIRS_CACHE: dict = {}
 
 
 def _split_pairs_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2761,7 +2708,7 @@ def _split_pairs_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
             split_col(F.col("doc_b")).alias("sb"),
         ).localCheckpoint()
 
-    return _app_memo(_SPLIT_PAIRS_CACHE, spark, sf_dir, _build)
+    return ARTIFACTS.get_or_build(spark, "dedup:split_pairs", sf_dir, _build)
 
 
 def _split_decontaminate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -55,10 +55,6 @@ LOG_SCALE = 10**9
 _DSIR_GENERATION = GenerationSlot()
 
 
-def _evict_dsir_generation() -> None:
-    _DSIR_GENERATION.evict()
-
-
 def _tok(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, b) — one row per token with its hash bucket."""
     docs = table(spark, sf_dir, "documents")
@@ -342,10 +338,6 @@ def dsir_bucket_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # frames must survive a driver that builds unigram and n-gram weight
 # frames before collecting either.
 _DSIR_NGRAM_GENERATION = GenerationSlot()
-
-
-def _evict_dsir_ngram_generation() -> None:
-    _DSIR_NGRAM_GENERATION.evict()
 
 
 def _tok_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:

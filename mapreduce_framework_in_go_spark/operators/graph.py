@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import GenerationSlot
 from ..registry import register
 from ..sources.tables import table
 
@@ -40,15 +41,7 @@ PR_ITERS = 3
 # sparse path applies.
 DENSE_NODE_LIMIT = 65536
 
-_CACHE: list[DataFrame] = []
-
-
-def _evict() -> None:
-    while _CACHE:
-        try:
-            _CACHE.pop().unpersist()
-        except Exception:
-            pass
+_CACHE = GenerationSlot()
 
 
 def _pagerank_oracle() -> str:
@@ -98,7 +91,7 @@ def _pagerank_oracle() -> str:
     tags=["graph"],
 )
 def supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _evict()
+    _CACHE.evict()
     items = (
         table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_suppkey")

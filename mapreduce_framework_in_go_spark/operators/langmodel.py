@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import GenerationSlot
 from ..functions.text import tokens_col
 from ..registry import register
 from ..sources.tables import table
@@ -60,15 +61,7 @@ LOG_SCALE = 10**9
 # persist each consumer re-plans the corpus explode+count, turning one
 # scan into four (visible as scans=4 in PLANS.md). Persisting the TINY
 # count frame pins one corpus pass total.
-_CACHE_GENERATION: list[DataFrame] = []
-
-
-def _evict_previous_generation() -> None:
-    while _CACHE_GENERATION:
-        try:
-            _CACHE_GENERATION.pop().unpersist()
-        except Exception:
-            pass
+_CACHE_GENERATION = GenerationSlot()
 
 # Shared SQL prelude: per-document token arrays and exploded bigrams.
 _BIGRAM_SQL = """
@@ -131,7 +124,7 @@ def _bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=["langmodel", "textops"],
 )
 def lm_kn_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     bc = _bigram_counts(spark, sf_dir).persist()
     _CACHE_GENERATION.append(bc)
     ctx = bc.groupBy("w1").agg(
@@ -235,7 +228,7 @@ def doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id", F.explode(tokens_col("text")).alias("w")
     )
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     # vocab-sized; persisted so tot and slog share one corpus count
     uni = tok.groupBy("w").agg(F.count("*").alias("cw")).persist()
     _CACHE_GENERATION.append(uni)
@@ -406,7 +399,7 @@ def zipf_fit_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=["langmodel", "textops", "llm-pipeline"],
 )
 def doc_perplexity_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     docs = table(spark, sf_dir, "documents")
     toks = tokens_col("text")
     pairs = F.zip_with(
@@ -513,7 +506,7 @@ def perplexity_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id", F.explode(tokens_col("text")).alias("w")
     )
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     uni = tok.groupBy("w").agg(F.count("*").alias("cw")).persist()
     _CACHE_GENERATION.append(uni)
     tot = uni.agg(F.sum("cw").alias("t"))

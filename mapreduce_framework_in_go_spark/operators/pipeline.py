@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import GenerationSlot
+from ..cache import PLANS, GenerationSlot
 from ..functions.text import tokens_col
 from ..registry import register
 from ..sources.tables import table
@@ -53,10 +53,6 @@ _STAGES = ["ingest", "quality", "language", "exact_dedup", "near_dedup"]
 # textops._WINNOW_GENERATION): dedup queries must not be able to evict
 # a pipeline frame that another still-unexecuted consumer rides.
 _PIPELINE_GENERATION = GenerationSlot()
-
-
-def _evict_pipeline_generation() -> None:
-    _PIPELINE_GENERATION.evict()
 
 _EN_STOP_SQL = "[" + ", ".join(f"'{w}'" for w in EN_STOP) + "]"
 
@@ -205,7 +201,7 @@ def _level_frame(docs: DataFrame) -> DataFrame:
     shingle frame handed to _lsh_pair_frame (evict once, up front)."""
     from .dedup import _shingle_rows_from, md5_long32
 
-    _evict_pipeline_generation()
+    _PIPELINE_GENERATION.evict()
     flags = flag_frame(docs).persist()
     _PIPELINE_GENERATION.append(flags)
     s2 = flags.where(F.col("pass_q") & F.col("pass_lang"))
@@ -250,7 +246,7 @@ def _level_frame(docs: DataFrame) -> DataFrame:
 
 def _level_frame_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BUILT level frame, memoized per (application, dataset) —
-    the plan_cache discipline (gopher/stream_ingest precedent).
+    the cache.PLANS discipline (gopher/stream_ingest precedent).
 
     Why (r10 verdict ask #1, probed in scripts/probe_funnel.py): the
     funnel's per-invocation wall decomposes as ~1.8 s py4j plan
@@ -259,7 +255,7 @@ def _level_frame_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     (RUN_STATS: built=0/reused=1, always 2 star rounds) — the r10
     "eviction churn" suspicion was wrong. The r10 regression is that
     the shared expression builders grew (fold staging) while their
-    OTHER consumers hid the build behind plan_cache; the funnel kept
+    OTHER consumers hid the build behind cache.PLANS; the funnel kept
     re-paying construction AND re-deriving the checkpointed edge set
     every invocation. Deployment compiles the pipeline once and runs
     it per corpus drop, so the three pipeline queries now share one
@@ -271,9 +267,8 @@ def _level_frame_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan then silently recomputes its unpersisted intermediates on a
     later action (deterministic, correct, slower); single-dataset
     sessions (bench, driver, deployment) never hit this."""
-    from ..plan_cache import memo_frame
 
-    return memo_frame(
+    return PLANS.get_or_build(
         spark,
         "pipeline_level",
         sf_dir,
@@ -599,7 +594,7 @@ def write_corpus_release(
             )
         if not force:
             return path
-    # evict dead-application keys only (the similarity._TRAINED_CACHE
+    # evict dead-application keys only (the cache.AppMemo
     # precedent): never another live consumer's entry
     for old_key in list(_RELEASE_WRITES):
         if old_key[0] != app_id:

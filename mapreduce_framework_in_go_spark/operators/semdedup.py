@@ -72,10 +72,6 @@ SEMDEDUP_TAUS = [0.30, 0.35, 0.40, 0.45]
 _SEM_GENERATION = GenerationSlot()
 
 
-def _evict_sem_generation() -> None:
-    _SEM_GENERATION.evict()
-
-
 def _member_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(members, max_prev) for the dataset.
 
@@ -88,9 +84,9 @@ def _member_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
     (cent_cos ASC, vec_id ASC) order. Vectors with no preceding
     same-cell partner are absent (left-join + coalesce downstream).
     """
-    _evict_sem_generation()
+    _SEM_GENERATION.evict()
     emb = _emb(spark, sf_dir)
-    cent = _trained_centroids(emb, cache_key=sf_dir)
+    cent = _trained_centroids(emb, sf_dir)
     members = (
         _with_nearest_cell(emb, cent)
         .join(F.broadcast(cent), "cell_id")

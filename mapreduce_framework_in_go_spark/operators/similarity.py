@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import ARTIFACTS, GenerationSlot
 from ..functions.vectors import cosine_from_norms, l2_norm
 from ..registry import register
 from ..sources.tables import table
@@ -67,19 +68,11 @@ CENT_SCALE = 10_000_000  # fixed-point scale for exact centroid means
 
 # one-generation cache for trained-centroid frames (same policy as
 # operators/dedup.py: each invocation evicts the previous one's).
-# NOTE: _emb / _nearest_cells / _trained_centroids /
-# _evict_previous_generation are a shared internal contract —
-# operators/dedup.py's dedup_embedding_ivf builds its candidate
-# generation on them; change their signatures in both call sites.
-_CACHE_GENERATION: list[DataFrame] = []
-
-
-def _evict_previous_generation() -> None:
-    while _CACHE_GENERATION:
-        try:
-            _CACHE_GENERATION.pop().unpersist()
-        except Exception:
-            pass
+# NOTE: _emb / _nearest_cells / _trained_centroids are a shared
+# internal contract — operators/dedup.py's dedup_embedding_ivf builds
+# its candidate generation on them; change their signatures in both
+# call sites.
+_CACHE_GENERATION = GenerationSlot()
 
 _COS_SQL = (
     "round(list_cosine_similarity({0}.embedding::DOUBLE[], "
@@ -447,14 +440,15 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The trained centroid table is an INDEX — a build-once artifact (on a
 # cluster it would be written to storage bucketed by cell and reused by
-# every search/dedup job until the corpus changes). Memoized per
-# (session, dataset) so consecutive queries in one session share one
-# Lloyd run; the cache is NOT part of the one-generation eviction,
-# which only manages per-round intermediates.
-_TRAINED_CACHE: dict[tuple[str, str], DataFrame] = {}
+# every search/dedup job until the corpus changes). An ARTIFACTS entry
+# per (session, dataset) so consecutive queries in one session share
+# one Lloyd run; the one-generation eviction only manages per-round
+# intermediates.
 
 
-def _trained_centroids(emb: DataFrame, cache_key: str | None = None) -> DataFrame:
+def _trained_centroids(
+    emb: DataFrame, sf_dir: str, corpus: str = "raw"
+) -> DataFrame:
     """(cell_id, ce, cn): LLOYD_ITERS k-means refinements of the seed
     centroids, entirely as DataFrame aggregates.
 
@@ -479,17 +473,19 @@ def _trained_centroids(emb: DataFrame, cache_key: str | None = None) -> DataFram
 
     Per-round frames persist under the module's one-generation cache:
     each assignment re-reads the previous round's centroids, and the
-    final search references them from multiple plan branches. With a
-    ``cache_key`` the FINAL centroid frame is additionally memoized per
-    (applicationId, key) and excluded from generation eviction, so every
-    consumer of the same dataset's index reuses one training run —
+    final search references them from multiple plan branches. The
+    FINAL centroid frame is memoized as ``trained:<corpus>`` for
+    ``sf_dir`` (``corpus`` names which of the dataset's embedding
+    corpora ``emb`` is) and excluded from generation eviction, so every
+    consumer of the same corpus's index reuses one training run —
     training is deterministic, so results are identical either way.
     """
-    if cache_key is not None:
-        key = (emb.sparkSession.sparkContext.applicationId, cache_key)
-        hit = _TRAINED_CACHE.get(key)
-        if hit is not None:
-            return hit
+    return ARTIFACTS.get_or_build(
+        emb.sparkSession, f"trained:{corpus}", sf_dir, lambda: _train(emb)
+    )
+
+
+def _train(emb: DataFrame) -> DataFrame:
     cent = _seed_centroids(emb)
     for _ in range(LLOYD_ITERS):
         sums = (
@@ -523,25 +519,13 @@ def _trained_centroids(emb: DataFrame, cache_key: str | None = None) -> DataFram
             .persist()
         )
         _CACHE_GENERATION.append(cent)
-    if cache_key is not None:
-        # keep the final index out of generation eviction; evict only
-        # indexes whose session is gone (their persisted blocks died
-        # with the context) — one live entry per (session, dataset), so
-        # alternating between datasets never retrains
-        _CACHE_GENERATION.remove(cent)
-        # materialize NOW: cent's lineage roots at the per-round cents
-        # still inside the evictable generation — a later invocation
-        # would evict them before an unmaterialized memo ever ran,
-        # forcing a full retrain on its next consumer action (the
-        # bpe._artifacts lesson)
-        cent.count()
-        for old_key in list(_TRAINED_CACHE):
-            if old_key[0] != key[0]:
-                try:
-                    _TRAINED_CACHE.pop(old_key).unpersist()
-                except Exception:
-                    pass
-        _TRAINED_CACHE[key] = cent
+    # keep the final index out of generation eviction, and materialize
+    # it NOW: cent's lineage roots at the per-round cents still inside
+    # the evictable generation — a later invocation would evict them
+    # before an unmaterialized memo ever ran, forcing a full retrain on
+    # its next consumer action (the bpe._artifacts lesson)
+    _CACHE_GENERATION.remove(cent)
+    cent.count()
     return cent
 
 
@@ -655,9 +639,9 @@ def _ivf_search_sql(
     tags=["similarity"],
 )
 def ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     emb = _emb(spark, sf_dir)
-    return _ivf_search(emb, _trained_centroids(emb, cache_key=sf_dir))
+    return _ivf_search(emb, _trained_centroids(emb, sf_dir))
 
 
 @register(
@@ -697,7 +681,7 @@ def ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import parquet_num_rows
 
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     emb = _emb(spark, sf_dir)
     n_rows = parquet_num_rows(sf_dir, "embeddings")
     exact5 = _bruteforce_topk(emb, IVF_TOP_K, n_rows).select(
@@ -722,7 +706,7 @@ def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sample = recall_row("sample", _ivf_search(emb, _seed_centroids(emb)))
     trained = recall_row(
-        "trained", _ivf_search(emb, _trained_centroids(emb, cache_key=sf_dir))
+        "trained", _ivf_search(emb, _trained_centroids(emb, sf_dir))
     )
     return sample.union(trained)
 
@@ -747,20 +731,20 @@ BLEND_NUM = 4  # centroid weight 4/5, vector weight 1/5
 # The label-blended corpus is a deterministic DERIVED TABLE (in
 # production it would be materialized at ingest, not re-derived per
 # query), consumed by four registered queries and the memoized indexes
-# trained on it — memoized per (session, dataset) with the standard
-# materialize-then-cache discipline so no generation eviction can force
-# a silent rebuild. Consumers use it directly: do NOT re-persist it or
-# append it to a generation cache (the eviction would strip the memo's
-# storage).
-_STRUCTURED_CACHE: dict[tuple[str, str], DataFrame] = {}
+# trained on it — an ARTIFACTS entry, persisted and counted before it
+# is stored so no generation eviction can force a silent rebuild.
+# Consumers use it directly: do NOT re-persist it or append it to a
+# generation cache (the eviction would strip the memo's storage).
 
 
 def _structured_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, embedding, vn): the label-blended corpus, memoized."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _STRUCTURED_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return ARTIFACTS.get_or_build(
+        spark, "structured_emb", sf_dir, lambda: _blend(spark, sf_dir)
+    )
+
+
+def _blend(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
     r = e.select(
         "vec_id",
@@ -796,12 +780,6 @@ def _structured_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding", l2_norm(F.col("embedding")).alias("vn")
     ).persist()
     out.count()
-    for old_key in [k for k in _STRUCTURED_CACHE if k[0] != key[0]]:
-        try:
-            _STRUCTURED_CACHE.pop(old_key).unpersist()
-        except Exception:
-            pass
-    _STRUCTURED_CACHE[key] = out
     return out
 
 
@@ -869,7 +847,7 @@ _STRUCTURED_SQL = f"""structured AS (
 def ann_ivf_recall_structured(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import parquet_num_rows
 
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     emb = _structured_emb(spark, sf_dir)  # memoized; not ours to evict
     n_rows = parquet_num_rows(sf_dir, "embeddings")
     exact5 = _bruteforce_topk(emb, IVF_TOP_K, n_rows).select(
@@ -895,7 +873,7 @@ def ann_ivf_recall_structured(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample = recall_row("sample", _ivf_search(emb, _seed_centroids(emb)))
     trained = recall_row(
         "trained",
-        _ivf_search(emb, _trained_centroids(emb, cache_key=f"structured:{sf_dir}")),
+        _ivf_search(emb, _trained_centroids(emb, sf_dir, "structured")),
     )
     return sample.union(trained)
 
@@ -1111,7 +1089,7 @@ def ann_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_hyperplane_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import parquet_num_rows
 
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     emb = _emb(spark, sf_dir)
     n_rows = parquet_num_rows(sf_dir, "embeddings")
     exact5 = _bruteforce_topk(emb, IVF_TOP_K, n_rows).select(
@@ -1178,9 +1156,9 @@ def _nprobe_tuning_oracle() -> str:
 def ann_nprobe_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import parquet_num_rows
 
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     emb = _emb(spark, sf_dir)
-    cent = _trained_centroids(emb, cache_key=sf_dir)
+    cent = _trained_centroids(emb, sf_dir)
     n_rows = parquet_num_rows(sf_dir, "embeddings")
     exact5 = _bruteforce_topk(emb, IVF_TOP_K, n_rows).select(
         "query_id", "neighbor_id"
@@ -1249,9 +1227,9 @@ def ann_nprobe_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=["similarity", "quality"],
 )
 def knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     emb = _emb(spark, sf_dir)
-    topk = _ivf_search(emb, _trained_centroids(emb, cache_key=sf_dir))
+    topk = _ivf_search(emb, _trained_centroids(emb, sf_dir))
     lab = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("label").cast("long").alias("label")
     )
@@ -1327,10 +1305,10 @@ def knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=["similarity", "quality"],
 )
 def source_topic_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     emb = _emb(spark, sf_dir)
     asg = _with_nearest_cell(
-        emb, _trained_centroids(emb, cache_key=sf_dir)
+        emb, _trained_centroids(emb, sf_dir)
     ).select("vec_id", "cell_id")
     src = table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), "source"
@@ -1428,12 +1406,12 @@ INCR_HOT_FACTOR = 2
     tags=["similarity"],
 )
 def ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _evict_previous_generation()
+    _CACHE_GENERATION.evict()
     emb = _emb(spark, sf_dir)
     is_delta = (F.col("vec_id") % INCR_DELTA_MOD) == INCR_DELTA_REM
     base = emb.where(~is_delta)
     delta = emb.where(is_delta)
-    cent = _trained_centroids(base, cache_key=f"incr:{sf_dir}")
+    cent = _trained_centroids(base, sf_dir, "incr")
     nb = (
         _with_nearest_cell(base, cent)
         .groupBy("cell_id")

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import PLANS
 from ..registry import register
 from ..streaming import nb_gate as sng
 from ..streaming import windows as sw
@@ -554,7 +555,7 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _emb(spark, sf_dir).where(
         (F.col("vec_id") % INCR_DELTA_MOD) != INCR_DELTA_REM
     )
-    cent = _trained_centroids(base, cache_key=f"incr:{sf_dir}")
+    cent = _trained_centroids(base, sf_dir, "incr")
     delta = siv.emb_stream(spark, f"{sf_dir}/embeddings.parquet").where(
         (F.col("vec_id") % INCR_DELTA_MOD) == INCR_DELTA_REM
     )
@@ -656,7 +657,6 @@ def _gopher_rep_oracle() -> str:
     tags=["streaming", "textops", "llm-pipeline"],
 )
 def stream_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plan_cache import memo_frame
     from .textops import gopher_repetition_frame
 
     def _build() -> DataFrame:
@@ -667,9 +667,9 @@ def stream_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the fold expression tree costs ~2 s of py4j plan construction —
     # memoized per (app, dataset); each invocation still starts a fresh
-    # streaming query over the cached plan (plan_cache.py rationale)
+    # streaming query over the cached plan (cache.py rationale)
     return _run(
-        memo_frame(spark, "stream_gopher_repetition", sf_dir, _build),
+        PLANS.get_or_build(spark, "stream_gopher_repetition", sf_dir, _build),
         "append",
         "gopher_repetition",
     )
@@ -774,7 +774,6 @@ def _ingest_release_oracle() -> str:
     tags=["streaming", "pipeline", "llm-pipeline"],
 )
 def stream_ingest_release(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plan_cache import memo_frame
     from ..streaming import ingest_release as sir
 
     def _build() -> DataFrame:
@@ -791,11 +790,11 @@ def stream_ingest_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the composed ledger's expression tree costs ~2.4 s of py4j plan
     # construction vs ~1.9 s of stream execution — memoized per (app,
     # dataset); each invocation still starts a fresh streaming query
-    # over the cached plan. The plan's lineage roots in _MODEL_CACHE's
-    # persisted lik frame, which shares the (applicationId, dataset)
-    # key, so the plan can never outlive its model.
+    # over the cached plan. The plan's lineage roots in the memoized
+    # model's persisted lik frame, which lives as long as this plan
+    # (both are per-(app, dataset) memo entries).
     return _run(
-        memo_frame(spark, "stream_ingest_release", sf_dir, _build),
+        PLANS.get_or_build(spark, "stream_ingest_release", sf_dir, _build),
         "append",
         "ingest_release",
     )

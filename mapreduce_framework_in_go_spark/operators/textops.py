@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import GenerationSlot
+from ..cache import PLANS, GenerationSlot
 from ..functions.text import md5_long32, shingles_col, tokens_col
 from ..registry import register
 from ..sources.tables import table
@@ -56,10 +56,6 @@ RK_MOD = 2_147_483_647
 # slot would let each build unpersist the other's in-flight frame
 # (per-slot rule, see relational._RANK_CACHE).
 _WINNOW_GENERATION = GenerationSlot()
-
-
-def _evict_winnow_generation() -> None:
-    _WINNOW_GENERATION.evict()
 
 
 def _stop_hits(tokens: Column, words: list[str]) -> Column:
@@ -609,7 +605,7 @@ def _winnow_pair_frames(
     from .dedup import _shingle_rows
 
     docs = table(spark, sf_dir, "documents")
-    _evict_winnow_generation()
+    _WINNOW_GENERATION.evict()
     # the fingerprint chain (per-window slice/min over the hash array,
     # O(n*w) per doc) feeds BOTH sides of the candidate self-join —
     # persist it once instead of running the selection twice (r13,
@@ -1100,7 +1096,6 @@ def _gopher_rep_oracle() -> str:
     tags=["textops", "llm-pipeline"],
 )
 def gopher_repetition_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plan_cache import memo_frame
 
     def _build() -> DataFrame:
         docs = table(spark, sf_dir, "documents")
@@ -1119,8 +1114,8 @@ def gopher_repetition_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~70% of this query's per-invocation wall time is py4j plan
     # CONSTRUCTION (1.8 s build vs 0.7 s exec at sf0.1) — memoized per
     # (app, dataset); every action over the cached frame re-executes
-    # the full fold work honestly (plan_cache.py rationale).
-    return memo_frame(spark, "gopher_repetition_flags", sf_dir, _build)
+    # the full fold work honestly (cache.py rationale).
+    return PLANS.get_or_build(spark, "gopher_repetition_flags", sf_dir, _build)
 
 
 _GOPHER_REP_RESERVED = frozenset(

@@ -939,10 +939,6 @@ from ..cache import GenerationSlot  # noqa: E402
 _PACK_BOUNDARY_GENERATION = GenerationSlot()
 
 
-def _evict_pack_boundary_generation() -> None:
-    _PACK_BOUNDARY_GENERATION.evict()
-
-
 @register(
     "pack_boundary_contamination",
     oracle=_PACK_BOUNDARY_ORACLE,
@@ -1013,7 +1009,7 @@ def pack_boundary_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per action. Persist the narrow post-tokenize trunk once; every
     # group statistic derives from it (g_tokens = the group's last
     # cumulative sum, exactly sum(n)).
-    _evict_pack_boundary_generation()
+    _PACK_BOUNDARY_GENERATION.evict()
     local = _PACK_BOUNDARY_GENERATION.adopt(
         t.withColumn("local_cum", F.sum("n").over(w_local)).persist()
     )

@@ -23,12 +23,14 @@ def _fresh_plan_cache():
     """Plan tests must explain FRESH, unexecuted frames: an executed
     memoized frame's AQE explain lists final + initial trees (the
     documented gotcha), doubling Exchange counts. Clearing the
-    per-application plan cache before every test guarantees each
+    per-application plan memo before every test guarantees each
     registered-fn call builds anew (rebuild cost is ~2 s for the
-    heaviest frame — negligible against the suite)."""
-    from mapreduce_framework_in_go_spark import plan_cache
+    heaviest frame — negligible against the suite). Only plans:
+    ``cache.ARTIFACTS`` is kept, or every test would rebuild every
+    trained index and stored table it touches."""
+    from mapreduce_framework_in_go_spark import cache
 
-    plan_cache._PLANS.clear()
+    cache.PLANS.clear()
     yield
 
 

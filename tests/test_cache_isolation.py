@@ -12,11 +12,16 @@ storage level to NONE).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
-from mapreduce_framework_in_go_spark.operators import dedup, pipeline, textops
-from mapreduce_framework_in_go_spark.operators.similarity import (
-    _evict_previous_generation as sim_evict,
+from mapreduce_framework_in_go_spark.cache import AppMemo
+from mapreduce_framework_in_go_spark.operators import (
+    dedup,
+    pipeline,
+    similarity,
+    textops,
 )
 from mapreduce_framework_in_go_spark.sources.tables import table
 
@@ -24,7 +29,7 @@ from mapreduce_framework_in_go_spark.sources.tables import table
 def test_winnow_frames_survive_dedup_eviction(spark, sf_dir):
     _cand, _pairs, sh = textops._winnow_pair_frames(spark, sf_dir)
     assert sh.storageLevel.useMemory
-    dedup._evict_previous_generation()  # any dedup-family build runs this
+    dedup._CACHE_GENERATION.evict()  # any dedup-family build runs this
     assert sh.storageLevel.useMemory, (
         "winnow shingle frame evicted by dedup's generation — per-slot "
         "rule violated"
@@ -35,7 +40,7 @@ def test_pipeline_frames_survive_dedup_eviction(spark, sf_dir):
     pipeline._level_frame(table(spark, sf_dir, "documents"))
     frames = list(pipeline._PIPELINE_GENERATION)
     assert frames and all(f.storageLevel.useMemory for f in frames)
-    dedup._evict_previous_generation()
+    dedup._CACHE_GENERATION.evict()
     assert all(f.storageLevel.useMemory for f in frames), (
         "pipeline flags/shingles evicted by dedup's generation"
     )
@@ -58,7 +63,7 @@ def test_clusters_delta_slot_survives_dedup_eviction(spark, sf_dir):
     assert all(f.storageLevel.useMemory for f in dedup_frames), (
         "delta-merge build evicted dedup's generation — per-slot rule"
     )
-    dedup._evict_previous_generation()
+    dedup._CACHE_GENERATION.evict()
     assert all(f.storageLevel.useMemory for f in delta_frames), (
         "dedup eviction reached the delta-merge slot — per-slot rule"
     )
@@ -79,7 +84,7 @@ def test_delta_consumer_slots_are_isolated(spark, sf_dir):
     assert merge_frames and all(
         f.storageLevel.useMemory for f in merge_frames
     )
-    dedup._evict_clusters_delta_generation()  # proof-shape entry path
+    dedup._CLUSTERS_DELTA_GENERATION.evict()  # proof-shape entry path
     dedup._CLUSTERS_STREAM_GENERATION.evict()  # streaming fold path
     assert all(f.storageLevel.useMemory for f in merge_frames), (
         "a sibling delta consumer's eviction reached the merge-only "
@@ -98,8 +103,8 @@ def test_delta_base_artifact_survives_slot_evictions(spark, sf_dir):
     truncation: every artifact frame must scan an ExistingRDD, with no
     upstream plan an eviction could force back into execution."""
     labels, idx = dedup._delta_base_artifact(spark, sf_dir)
-    dedup._evict_previous_generation()
-    dedup._evict_clusters_delta_generation()
+    dedup._CACHE_GENERATION.evict()
+    dedup._CLUSTERS_DELTA_GENERATION.evict()
     for f in (labels, *idx.values()):
         plan = f._jdf.queryExecution().optimizedPlan().toString()
         # a later merge may wrap the checkpointed labels in an
@@ -120,8 +125,8 @@ def test_assignment_artifact_survives_slot_evictions(spark, sf_dir):
     every generation slot — same lineage-truncation contract as the
     frozen-base artifact."""
     labels = dedup.cluster_assignment(spark, sf_dir)
-    dedup._evict_previous_generation()
-    dedup._evict_clusters_delta_generation()
+    dedup._CACHE_GENERATION.evict()
+    dedup._CLUSTERS_DELTA_GENERATION.evict()
     plan = labels._jdf.queryExecution().optimizedPlan().toString()
     assert (
         "LogicalRDD" in plan or "ExistingRDD" in plan
@@ -142,10 +147,10 @@ def test_exact_gt_artifact_survives_slot_evictions(spark, sf_dir):
     from mapreduce_framework_in_go_spark.sources.tables import table
 
     emb = table(spark, sf_dir, "embeddings")
-    gt = ivfpq._exact_ground_truth(emb, f"isolation:{sf_dir}")
+    gt = ivfpq._exact_ground_truth(emb, sf_dir, "isolation")
     ivfpq._slot("ann_ivfpq_recall").evict()
     ivfpq._slot("ann_ivfpq_nprobe_tuning").evict()
-    dedup._evict_previous_generation()
+    dedup._CACHE_GENERATION.evict()
     plan = gt._jdf.queryExecution().optimizedPlan().toString()
     assert (
         "LogicalRDD" in plan or "ExistingRDD" in plan
@@ -154,7 +159,7 @@ def test_exact_gt_artifact_survives_slot_evictions(spark, sf_dir):
         "eviction could force a silent rebuild of the scoring pass"
     )
     # and the memo is shared: the same key returns the same frame
-    assert ivfpq._exact_ground_truth(emb, f"isolation:{sf_dir}") is gt
+    assert ivfpq._exact_ground_truth(emb, sf_dir, "isolation") is gt
 
 
 def test_pack_boundary_slot_survives_neighbor_evictions(spark, sf_dir):
@@ -168,8 +173,8 @@ def test_pack_boundary_slot_survives_neighbor_evictions(spark, sf_dir):
     REGISTRY["pack_boundary_contamination"].fn(spark, sf_dir)
     frames = list(training_prep._PACK_BOUNDARY_GENERATION)
     assert frames and all(f.storageLevel.useMemory for f in frames)
-    pipeline._evict_pipeline_generation()
-    dedup._evict_previous_generation()
+    pipeline._PIPELINE_GENERATION.evict()
+    dedup._CACHE_GENERATION.evict()
     assert all(f.storageLevel.useMemory for f in frames), (
         "pack-boundary junction frame evicted by a neighbor family"
     )
@@ -179,7 +184,7 @@ def test_emb_ivf_assignment_survives_similarity_eviction(spark, sf_dir):
     df = dedup.dedup_embedding_ivf(spark, sf_dir)
     frames = list(dedup._EMB_IVF_GENERATION)
     assert frames and all(f.storageLevel.useMemory for f in frames)
-    sim_evict()  # any similarity-family build runs this
+    similarity._CACHE_GENERATION.evict()  # any similarity build runs this
     assert all(f.storageLevel.useMemory for f in frames), (
         "embedding-IVF assignment evicted by similarity's generation"
     )
@@ -203,5 +208,41 @@ def test_sketch_slots_survive_each_other_and_dedup(spark, sf_dir):
     )
     hll_frames = list(sketches._HLL_GENERATION)
     assert hll_frames and all(f.storageLevel.useMemory for f in hll_frames)
-    dedup._evict_previous_generation()
+    dedup._CACHE_GENERATION.evict()
     assert all(f.storageLevel.useMemory for f in cms_frames + hll_frames)
+
+
+def test_app_memo_key_and_dead_app_eviction(spark, sf_dir):
+    """The memo rule in cache.AppMemo, without a Spark action: one key
+    per (application, name, abspath(dataset)); a miss drops only
+    other applications' keys; ``build`` runs once per key."""
+    memo = AppMemo()
+    dead = ("app-gone", "x", os.path.abspath(sf_dir))
+    memo[dead] = "stale"
+    builds: list[str] = []
+
+    def build(tag: str):
+        def _build() -> str:
+            builds.append(tag)
+            return tag
+
+        return _build
+
+    assert memo.get_or_build(spark, "x", sf_dir, build("x")) == "x"
+    assert dead not in memo, "dead-application key survived a miss"
+    # relative, absolute and trailing-slash spellings are one key
+    for path in (os.path.relpath(sf_dir), os.path.abspath(sf_dir) + "/"):
+        assert memo.get_or_build(spark, "x", path, build("x2")) == "x"
+    assert builds == ["x"]
+    # another name (or dataset) of the live application is its own
+    # entry, and building it keeps the first
+    assert memo.get_or_build(spark, "y", sf_dir, build("y")) == "y"
+    assert memo.get_or_build(spark, "x", "/elsewhere", build("z")) == "z"
+    assert builds == ["x", "y", "z"] and len(memo) == 3
+
+
+def test_structured_emb_one_entry_per_dataset(spark, sf_dir):
+    """A relative and an absolute path to one dataset share ONE
+    memoized label-blended corpus — never a second build and persist."""
+    rel = similarity._structured_emb(spark, os.path.relpath(sf_dir))
+    assert similarity._structured_emb(spark, os.path.abspath(sf_dir)) is rel

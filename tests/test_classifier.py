@@ -108,7 +108,7 @@ def test_nb_frames_survive_dedup_eviction(spark, sf_dir):
     scored = classifier._scored(spark, sf_dir)
     frames = list(classifier._NB_GENERATION)
     assert frames and all(f.storageLevel.useMemory for f in frames)
-    dedup._evict_previous_generation()
+    dedup._CACHE_GENERATION.evict()
     assert all(f.storageLevel.useMemory for f in frames), (
         "classifier frames evicted by dedup's generation — per-slot "
         "rule violated"
@@ -175,7 +175,7 @@ def test_nb_model_memoized_outside_generation(spark, sf_dir):
     m2 = classifier._model(spark, sf_dir)
     assert all(a is b for a, b in zip(m1, m2))
     meta, _priors, lik, tc = m1
-    classifier._evict_nb_generation()
+    classifier._NB_GENERATION.evict()
     for f in (meta, lik, tc):
         assert f.storageLevel.useMemory, (
             "memoized model frame evicted by the scored generation"

@@ -636,10 +636,7 @@ def test_clusters_delta_merge_only_matches_scratch(spark, sf_dir):
     """The registered deployment-shape query: frozen-base artifact
     memoized per (app, dataset) — second call reuses it (no rebuild)
     — and the merged assignment equals the from-scratch clustering."""
-    from mapreduce_framework_in_go_spark.operators.dedup import (
-        _DELTA_INDEX_CACHE,
-        _DELTA_LABELS_CACHE,
-    )
+    from mapreduce_framework_in_go_spark.cache import ARTIFACTS
 
     scratch = _assignment(SPECS["dedup_clusters_lsh"].fn(spark, sf_dir))
     got = {
@@ -649,14 +646,19 @@ def test_clusters_delta_merge_only_matches_scratch(spark, sf_dir):
         .collect()
     }
     assert got == scratch
-    import os as _os
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    n_keys = len(_DELTA_LABELS_CACHE), len(_DELTA_INDEX_CACHE)
-    labels = _DELTA_LABELS_CACHE[key]
-    assert key in _DELTA_INDEX_CACHE
+    def _no_rebuild():
+        raise AssertionError("frozen-base artifact rebuilt on a repeat")
+
+    def _memo(name):
+        return ARTIFACTS.get_or_build(spark, name, sf_dir, _no_rebuild)
+
+    labels, index = _memo("dedup:delta_labels"), _memo("dedup:delta_index")
+    n_keys = len(ARTIFACTS)
     SPECS["dedup_clusters_delta_merge_only"].fn(spark, sf_dir).count()
-    assert (len(_DELTA_LABELS_CACHE), len(_DELTA_INDEX_CACHE)) == n_keys
+    assert len(ARTIFACTS) == n_keys
+    assert _memo("dedup:delta_labels") is labels
+    assert _memo("dedup:delta_index") is index
     assert labels.storageLevel.useMemory, (
         "frozen-base artifact evicted by a repeat merge — the memo "
         "must live outside the generation slot"

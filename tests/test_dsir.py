@@ -91,7 +91,7 @@ def _raw_bucket_lists(sf_dir: str):
 def test_dsir_frames_survive_dedup_eviction(spark, sf_dir):
     slr, w = dsir._frames(spark, sf_dir)
     assert slr.storageLevel.useMemory and w.storageLevel.useMemory
-    dedup._evict_previous_generation()
+    dedup._CACHE_GENERATION.evict()
     assert slr.storageLevel.useMemory and w.storageLevel.useMemory, (
         "dsir frames evicted by dedup's generation — per-slot rule violated"
     )
@@ -161,7 +161,7 @@ def test_ngram_frames_survive_unigram_eviction(spark, sf_dir):
     """Per-slot rule: the two DSIR configs own separate generations."""
     slr, w = dsir._frames_ngram(spark, sf_dir)
     assert slr.storageLevel.useMemory and w.storageLevel.useMemory
-    dsir._evict_dsir_generation()
+    dsir._DSIR_GENERATION.evict()
     assert slr.storageLevel.useMemory and w.storageLevel.useMemory, (
         "ngram frames evicted by the unigram generation — per-slot rule"
     )

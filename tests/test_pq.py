@@ -105,9 +105,9 @@ def test_exact_ground_truth_numpy_matches_catalyst(spark, sf_dir):
         "vec_id", _fixed(F.col("embedding")).alias("v")
     ).persist()
     try:
-        fast = _exact_ground_truth(emb, f"test_gt:{sf_dir}")
-        # memo identity: same (app, key) -> the same artifact object
-        assert _exact_ground_truth(emb, f"test_gt:{sf_dir}") is fast
+        fast = _exact_ground_truth(emb, sf_dir, "test_gt")
+        # memo identity: same (app, name, dataset) -> the same object
+        assert _exact_ground_truth(emb, sf_dir, "test_gt") is fast
         qf = fixed.where(F.col("vec_id") % QUERY_MOD == 0).select(
             F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
         )

@@ -60,7 +60,7 @@ def test_tuning_curve_is_monotone(spark, sf_dir):
 def test_semdedup_frames_survive_dedup_eviction(spark, sf_dir):
     members, _mp = semdedup._member_frames(spark, sf_dir)
     assert members.storageLevel.useMemory
-    dedup._evict_previous_generation()
+    dedup._CACHE_GENERATION.evict()
     assert members.storageLevel.useMemory, (
         "semdedup member frame evicted by dedup's generation — per-slot "
         "rule violated"
