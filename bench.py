@@ -200,6 +200,17 @@ HEAVY_3RUN = {
 CALIB_EVERY = 12  # one calibration probe every N headline queries
 
 
+def calibrate(spark) -> float:
+    """Seconds for one FIXED whole-stage-codegen workload (a 1e9-row
+    ``sum(id % 7)``). Identical work each probe, so its wall measures
+    the session's environment + JIT tier, not the queries. Run it
+    twice untimed after the session's warm-ups before trusting a
+    reading: the first probes of an unsettled JVM read ~2x slow."""
+    t0 = time.perf_counter()
+    spark.range(1_000_000_000).selectExpr("sum(id % 7)").collect()
+    return round(time.perf_counter() - t0, 3)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
@@ -230,13 +241,6 @@ def main() -> None:
     # against the committed clean reference (bench_budget.json
     # "calib_sec") to decide whether this run may be graded on the
     # tight quiet-tier caps.
-    import time as _time
-
-    def _calibrate() -> float:
-        t0 = _time.perf_counter()
-        spark.range(1_000_000_000).selectExpr("sum(id % 7)").collect()
-        return round(_time.perf_counter() - t0, 3)
-
     specs = all_queries()
     names = [n for n in HEADLINE if n in specs]
     # Focused A/B mode (drift-ledger work): $SPARK_GRAFT_ONLY is a
@@ -255,9 +259,9 @@ def main() -> None:
     # an unsettled JVM read 0.78/0.93 s (vs ~0.4 steady) on two r13
     # runs and misclassified otherwise-quiet sessions into the loaded
     # tier. Two warm executions, then the first probe.
-    _calibrate()
-    _calibrate()
-    calib_series = [{"after_n": 0, "sec": _calibrate()}]
+    calibrate(spark)
+    calibrate(spark)
+    calib_series = [{"after_n": 0, "sec": calibrate(spark)}]
 
     # Two timed runs per query, report the min: one shared session means
     # a query's timing can absorb neighborhood effects (GC pauses,
@@ -272,7 +276,7 @@ def main() -> None:
     for name in names:
         if len(timings) - calib_series[-1]["after_n"] >= CALIB_EVERY:
             calib_series.append(
-                {"after_n": len(timings), "sec": _calibrate()}
+                {"after_n": len(timings), "sec": calibrate(spark)}
             )
         if name in HEAVY_3RUN:  # untimed warm execution
             specs[name].fn(spark, sf_dir).write.format("noop").mode(
@@ -318,7 +322,7 @@ def main() -> None:
     except (OSError, KeyError, ValueError):
         pass  # no budget table: nothing to retime against
 
-    calib_series.append({"after_n": len(timings), "sec": _calibrate()})
+    calib_series.append({"after_n": len(timings), "sec": calibrate(spark)})
     total = round(sum(timings.values()), 3)
     record = {
         "metric": "headline_queries_total",

@@ -5,6 +5,8 @@ embedding-cosine near-dup — the core of a pretraining-corpus pipeline.
 Everything is DataFrame built-ins (higher-order array functions, hash
 exprs, joins); hash parameters are module constants shared verbatim
 with the DuckDB oracles, so every query is mechanically verifiable.
+The pair queries share the candidate, size and verify phases of
+``operators/setsim.py``.
 
 Scale notes (100 TB):
 
@@ -51,6 +53,15 @@ from ..functions.vectors import cosine_from_norms, l2_norm
 from ..cache import ARTIFACTS, PLANS, GenerationSlot
 from ..registry import register
 from ..sources.tables import table
+from .setsim import (
+    band_pairs,
+    in_prefix,
+    jaccard,
+    overlap,
+    prefix_candidates,
+    ranked_all,
+    with_sizes,
+)
 
 # MinHash: k permutations h_i(x) = (A_i * x + B_i) mod P, banded b x r.
 # P is the smallest prime > 2^32; A_i stays ~2^24 so A_i * x < 2^57.
@@ -122,6 +133,19 @@ def _shingle_rows_from(docs: DataFrame) -> DataFrame:
 
 def _shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _shingle_rows_from(table(spark, sf_dir, "documents"))
+
+
+def _slot_shingles(
+    spark: SparkSession, sf_dir: str, hashed: bool = False
+) -> DataFrame:
+    """The documents' shingle rows (plus their ``h`` hash when
+    ``hashed``), persisted as the dedup family's new generation: the
+    previous generation is evicted first."""
+    _CACHE_GENERATION.evict()
+    sh = _shingle_rows(spark, sf_dir)
+    if hashed:
+        sh = sh.withColumn("h", md5_long32(F.col("s")))
+    return _CACHE_GENERATION.adopt(sh.persist())
 
 
 @register(
@@ -256,30 +280,35 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lsh_pair_frame(table(spark, sf_dir, "documents"))
 
 
-def _band_frame(sig: DataFrame) -> DataFrame:
-    """(doc_id, band_id, band_sig): the banded LSH keys of a signature
-    frame — md5 over each band's LSH_ROWS signature slots."""
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.md5(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.element_at("sig", b * LSH_ROWS + r + 1)
-                                    for r in range(LSH_ROWS)
-                                ],
-                            )
-                        ).alias("band_sig"),
+def _band_structs(bands: int = LSH_BANDS, rows: int = LSH_ROWS) -> Column:
+    """array<struct<band_id, band_sig>> over the ``sig`` column: md5
+    over each band's ``rows`` signature slots."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band_id"),
+                F.md5(
+                    F.concat_ws(
+                        ",",
+                        *[
+                            F.element_at("sig", b * rows + r + 1)
+                            for r in range(rows)
+                        ],
                     )
-                    for b in range(LSH_BANDS)
-                ]
+                ).alias("band_sig"),
             )
-        ).alias("band"),
+            for b in range(bands)
+        ]
+    )
+
+
+def _band_frame(
+    sig: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS
+) -> DataFrame:
+    """(doc_id, band_id, band_sig): the banded LSH keys of a signature
+    frame, ``bands`` x ``rows`` over its slots."""
+    return sig.select(
+        "doc_id", F.explode(_band_structs(bands, rows)).alias("band")
     ).select("doc_id", "band.band_id", "band.band_sig")
 
 
@@ -319,17 +348,7 @@ def _lsh_pair_frame(
         RUN_STATS["lsh_shingles_reused"] = RUN_STATS.get("lsh_shingles_reused", 0) + 1
     sig = _minhash_sig(sh).cache()
     gen.append(sig)
-    bands = _band_frame(sig)
-
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"), ["band_id", "band_sig"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    cand = band_pairs(_band_frame(sig))
 
     est = (
         cand.join(sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a")), "doc_a")
@@ -349,26 +368,14 @@ def _lsh_pair_frame(
         )
     )
 
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    inter = (
-        cand.join(sh.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), "s"), ["doc_b", "s"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    jac = F.round(
-        F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6
-    )
     return (
-        est.join(inter, ["doc_a", "doc_b"])
-        .join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")), "doc_b")
-        .where(jac >= JACCARD_THRESHOLD)
+        with_sizes(est.join(overlap(cand, sh), ["doc_a", "doc_b"]), sh)
+        .where(jaccard() >= JACCARD_THRESHOLD)
         .select(
             "doc_a",
             "doc_b",
             F.round("est_jaccard", 6).alias("est_jaccard"),
-            jac.alias("jaccard"),
+            jaccard().alias("jaccard"),
         )
     )
 
@@ -400,6 +407,45 @@ def _simhash_sigs_cte() -> str:
       SELECT doc_id, {bit_sums} FROM hashed GROUP BY doc_id
     ),
     sigs AS (SELECT doc_id, {sig_expr} AS simhash FROM bits)"""
+
+
+def _simhash_pairs(sig: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, hamming): pairs of a ``(doc_id, simhash)`` frame
+    sharing one of the SIMHASH_CHUNKS 8-bit chunks (pigeonhole
+    candidates), kept when their full-signature hamming distance is at
+    most SIMHASH_HAMMING_MAX."""
+    chunks = sig.select(
+        "doc_id",
+        "simhash",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(c).alias("chunk_id"),
+                        F.shiftright("simhash", 8 * (SIMHASH_CHUNKS - 1 - c))
+                        .bitwiseAND(F.lit(255))
+                        .alias("chunk_val"),
+                    )
+                    for c in range(SIMHASH_CHUNKS)
+                ]
+            )
+        ).alias("ch"),
+    ).select("doc_id", "simhash", "ch.chunk_id", "ch.chunk_val")
+    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    return (
+        chunks.alias("a")
+        .join(chunks.alias("b"), ["chunk_id", "chunk_val"])
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.simhash").alias("sh_a"),
+            F.col("b.simhash").alias("sh_b"),
+        )
+        .distinct()
+        .where(hamming <= SIMHASH_HAMMING_MAX)
+        .select("doc_a", "doc_b", hamming.cast("long").alias("hamming"))
+    )
 
 
 def _simhash_sig_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -500,40 +546,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     _CACHE_GENERATION.evict()
     sig = _simhash_sig_frame(spark, sf_dir).persist()
     _CACHE_GENERATION.append(sig)
-    chunks = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk_id"),
-                        F.shiftright("simhash", 8 * (SIMHASH_CHUNKS - 1 - c))
-                        .bitwiseAND(F.lit(255))
-                        .alias("chunk_val"),
-                    )
-                    for c in range(SIMHASH_CHUNKS)
-                ]
-            )
-        ).alias("ch"),
-    ).select("doc_id", "simhash", "ch.chunk_id", "ch.chunk_val")
-    cand = (
-        chunks.alias("a")
-        .join(chunks.alias("b"), ["chunk_id", "chunk_val"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        cand.where(hamming <= SIMHASH_HAMMING_MAX)
-        .select("doc_a", "doc_b", hamming.cast("long").alias("hamming"))
-    )
+    return _simhash_pairs(sig)
 
 
 @register(
@@ -565,19 +578,19 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=["dedup"],
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    inter = _jaccard_inter_frame(spark, sf_dir)
-    jac = F.round(
-        F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6
-    )
-    return inter.where(jac >= JACCARD_THRESHOLD).select(
-        "doc_a", "doc_b", F.col("n_common").cast("long"), jac.alias("jaccard")
+    inter = _jaccard_inter_frame(_slot_shingles(spark, sf_dir))
+    return inter.where(jaccard() >= JACCARD_THRESHOLD).select(
+        "doc_a", "doc_b", F.col("n_common").cast("long"), jaccard().alias("jaccard")
     )
 
 
-def _jaccard_inter_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_a, doc_b, n_a, n_b, n_common) for every pair that can reach
-    JACCARD_THRESHOLD — the exact-Jaccard pair core shared by
-    dedup_ngram_jaccard and dedup_clusters.
+def _jaccard_inter_frame(sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_a, n_b, n_common) for every pair of the
+    persisted ``(doc_id, s)`` shingle frame ``sh`` that can reach
+    JACCARD_THRESHOLD — the exact-Jaccard pair core: dedup_ngram_jaccard
+    and dedup_clusters threshold it, and the sketch metrics
+    (dedup_lsh_recall, dedup_winnow_recall, dedup_band_tuning,
+    dedup_simhash_tuning) take their ground truth from it.
 
     Candidate generation is LOSSLESS prefix filtering (the PPJoin
     family: Xiao et al., "Efficient Similarity Joins for Near Duplicate
@@ -601,96 +614,9 @@ def _jaccard_inter_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate-heavy corpus is bounded by prefix-bucket collisions.
     Epsilon: the output threshold applies to round(j, 6), so both the
     prefix length and the length filter use t - 1e-6 to stay strictly
-    lossless. Shingle rows persist one generation (they feed the df
-    count, the ranking, and both sides of the verify join)."""
-    _CACHE_GENERATION.evict()
-    sh = _shingle_rows(spark, sf_dir).persist()
-    _CACHE_GENERATION.append(sh)
-    cand = _prefix_candidates(sh, JACCARD_THRESHOLD - 1e-6)
-    return (
-        cand.join(sh.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), "s"), ["doc_b", "s"])
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-
-
-def _ranked_all(sh: DataFrame) -> DataFrame:
-    """(doc_id, s, rn, n): EVERY shingle row with its rank in the
-    global rarest-first (df ASC, s ASC) order and its doc's size. The
-    rank order is correctness-critical for the lossless prefix and
-    positional filters and must stay identical everywhere."""
-    dfreq = sh.groupBy("s").agg(F.count("*").alias("df"))
-    by_doc = Window.partitionBy("doc_id")
-    return sh.join(dfreq, "s").select(
-        "doc_id",
-        "s",
-        F.row_number().over(by_doc.orderBy("df", "s")).alias("rn"),
-        F.count("*").over(by_doc).alias("n"),
-    )
-
-
-def _ranked_prefix(sh: DataFrame, t: float) -> DataFrame:
-    """(doc_id, s, rn, n) restricted to each doc's lossless prefix in
-    the global rarest-first (df ASC, s ASC) order: the first
-    ``n - ceil(t*n) + 1`` shingles. Shared by the symmetric Jaccard
-    candidates (_prefix_candidates) and the one-sided containment
-    candidates (dedup_containment) — the prefix-length formula and the
-    tie-break order are correctness-critical for losslessness and must
-    stay identical in both."""
-    ranked = _ranked_all(sh)
-    return ranked.where(
-        F.col("rn") <= F.col("n") - F.ceil(F.lit(t) * F.col("n")) + 1
-    )
-
-
-def _prefix_candidates(
-    sh: DataFrame, t: float, positional: bool = True
-) -> DataFrame:
-    """(doc_a, doc_b, n_a, n_b): every pair that can have Jaccard >= t,
-    by lossless prefix filtering over a ``(doc_id, s)`` shingle frame.
-    Only each doc's first ``n - ceil(t*n) + 1`` shingles in the global
-    (df ASC, s ASC) order are join keys; the length-ratio filter prunes
-    the rest at candidate time.
-
-    ``positional`` adds the PPJoin positional filter (Xiao et al.
-    WWW'08 §3.2), also lossless: both shingle lists are sorted by the
-    SAME global order, so a qualifying pair's EARLIEST common shingle
-    has the minimum rank among its prefix collisions in both docs
-    simultaneously (rank i in A, j in B — and it must lie inside both
-    prefixes: rank_A(c) <= n_a - |A∩B| + 1 <= the prefix length).
-    Every other common shingle sits after it in both lists, so
-    |A∩B| <= 1 + min(n_a - i, n_b - j); J >= t needs
-    |A∩B| >= t/(1+t) * (n_a + n_b), and pairs whose upper bound cannot
-    reach that are discarded before the (much wider) verify join. The
-    min-rank aggregate rides the same shuffle the candidate distinct
-    already paid — the filter is free, and cuts surviving candidates
-    ~2x on the documents corpus (asserted in test_components)."""
-    prefix = _ranked_prefix(sh, t)
-    pa = prefix.select(
-        F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"), "s",
-        F.col("rn").alias("rn_a"),
-    )
-    pb = prefix.select(
-        F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"), "s",
-        F.col("rn").alias("rn_b"),
-    )
-    cand = (
-        pa.join(pb, "s")
-        .where(
-            (F.col("doc_a") < F.col("doc_b"))
-            & (F.col("n_a") >= t * F.col("n_b"))
-            & (F.col("n_b") >= t * F.col("n_a"))
-        )
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
-        .agg(F.min("rn_a").alias("i"), F.min("rn_b").alias("j"))
-    )
-    if positional:
-        ubound = 1 + F.least(F.col("n_a") - F.col("i"), F.col("n_b") - F.col("j"))
-        cand = cand.where(
-            ubound >= F.lit(t) / (1 + t) * (F.col("n_a") + F.col("n_b"))
-        )
-    return cand.select("doc_a", "doc_b", "n_a", "n_b")
+    lossless. ``sh`` must be persisted: it feeds the df count, the
+    ranking, and both sides of the verify join."""
+    return overlap(prefix_candidates(sh, JACCARD_THRESHOLD - 1e-6), sh)
 
 
 @register(
@@ -724,9 +650,7 @@ def _prefix_candidates(
     tags=["dedup"],
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _CACHE_GENERATION.evict()
-    sh = _shingle_rows(spark, sf_dir).persist()
-    _CACHE_GENERATION.append(sh)
+    sh = _slot_shingles(spark, sf_dir)
     t = CONTAINMENT_THRESHOLD - 1e-6  # threshold applies to round(c, 6)
     # One-sided positional filter (r14, VERDICT r13 #9; Xiao et al.
     # WWW'08 §3.2 adapted to containment), lossless: both shingle
@@ -739,13 +663,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are discarded before the (much wider) verify join. The sup side
     # now exposes its rank too — ranked rows persist once (the window
     # would otherwise run per consumer) in the dedup family slot.
-    ranked = _ranked_all(sh).persist()
-    _CACHE_GENERATION.append(ranked)
-    prefix = ranked.where(
-        F.col("rn") <= F.col("n") - F.ceil(F.lit(t) * F.col("n")) + 1
-    )
+    ranked = _CACHE_GENERATION.adopt(ranked_all(sh).persist())
     cand = (
-        prefix.select(
+        ranked.where(in_prefix(t))
+        .select(
             F.col("doc_id").alias("doc_sub"),
             F.col("n").alias("n_sub"),
             "s",
@@ -776,12 +697,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_sub", "doc_sup", "n_sub")
     )
-    inter = (
-        cand.join(sh.select(F.col("doc_id").alias("doc_sub"), "s"), "doc_sub")
-        .join(sh.select(F.col("doc_id").alias("doc_sup"), "s"), ["doc_sup", "s"])
-        .groupBy("doc_sub", "doc_sup", "n_sub")
-        .agg(F.count("*").alias("n_common"))
-    )
+    inter = overlap(cand, sh, "doc_sub", "doc_sup")
     cont = F.round(F.col("n_common") / F.col("n_sub"), 6)
     return inter.where(cont >= CONTAINMENT_THRESHOLD).select(
         "doc_sub",
@@ -825,28 +741,9 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=["dedup", "metric"],
 )
 def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents")
-    _CACHE_GENERATION.evict()
-    sh = (
-        _shingle_rows_from(docs)
-        .withColumn("h", md5_long32(F.col("s")))
-        .persist()
-    )
-    _CACHE_GENERATION.append(sh)
-
-    lsh_pairs = _lsh_pair_frame(docs, sh=sh)
-
-    cand = _prefix_candidates(sh, JACCARD_THRESHOLD - 1e-6)
-    inter = (
-        cand.join(sh.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), "s"), ["doc_b", "s"])
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    jac = F.round(
-        F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6
-    )
-    true_pairs = inter.where(jac >= JACCARD_THRESHOLD)
+    sh = _slot_shingles(spark, sf_dir, hashed=True)
+    lsh_pairs = _lsh_pair_frame(table(spark, sf_dir, "documents"), sh=sh)
+    true_pairs = _jaccard_inter_frame(sh).where(jaccard() >= JACCARD_THRESHOLD)
 
     n_true = true_pairs.agg(F.count("*").alias("n_true"))
     n_lsh = lsh_pairs.agg(F.count("*").alias("n_lsh"))
@@ -1081,11 +978,8 @@ def connected_components(
     tags=["dedup"],
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _jaccard_inter_frame(spark, sf_dir)
-    jac = F.round(
-        F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6
-    )
-    dup = pairs.where(jac >= JACCARD_THRESHOLD).select(
+    pairs = _jaccard_inter_frame(_slot_shingles(spark, sf_dir))
+    dup = pairs.where(jaccard() >= JACCARD_THRESHOLD).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
     return _label_clusters(connected_components(dup))
@@ -1468,15 +1362,8 @@ INCREMENTAL_ORACLE = f"""
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     is_delta = F.col("doc_id") % DELTA_MOD == DELTA_REM
-    _CACHE_GENERATION.evict()
-    sh = (
-        _shingle_rows_from(docs)
-        .withColumn("h", md5_long32(F.col("s")))
-        .persist()
-    )
-    sig = _minhash_sig(sh).cache()
-    _CACHE_GENERATION.extend([sh, sig])
-    bands = _band_frame(sig)
+    sh = _slot_shingles(spark, sf_dir, hashed=True)
+    bands = _band_frame(_CACHE_GENERATION.adopt(_minhash_sig(sh).cache()))
 
     digests = docs.select("doc_id", F.md5("text").alias("dig"))
     delta = digests.where(is_delta)
@@ -1499,27 +1386,9 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_d", "doc_b")
         .distinct()
     )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    inter = (
-        cand.join(sh.select(F.col("doc_id").alias("doc_d"), "s"), "doc_d")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), "s"), ["doc_b", "s"])
-        .groupBy("doc_d", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    jac = F.round(
-        F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-        6,
-    )
     near = (
-        inter.join(
-            sizes.select(F.col("doc_id").alias("doc_d"), F.col("n").alias("n_a")),
-            "doc_d",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")),
-            "doc_b",
-        )
-        .select("doc_d", "doc_b", jac.alias("jaccard"))
+        with_sizes(overlap(cand, sh, "doc_d"), sh, "doc_d")
+        .select("doc_d", "doc_b", jaccard().alias("jaccard"))
         .where(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
     w = Window.partitionBy("doc_d").orderBy(
@@ -1750,16 +1619,7 @@ def clusters_delta_frame(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    cand_dd = (
-        bands_d.alias("a")
-        .join(bands_d.alias("b"), ["band_id", "band_sig"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    cand = cand_db.union(cand_dd)  # disjoint by construction
+    cand = cand_db.union(band_pairs(bands_d))  # disjoint by construction
     if base_index is not None:
         # bound the verification reads: semi-join the (stored) sketch
         # down to candidate endpoints before any groupBy, so the size
@@ -1777,27 +1637,9 @@ def clusters_delta_frame(
 
     # exact-Jaccard verification restricted to candidates (the same
     # verify discipline as _lsh_pair_frame)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    inter = (
-        cand.join(sh.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), "s"), ["doc_b", "s"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    jac = F.round(
-        F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-        6,
-    )
     vpairs = (
-        inter.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")),
-            "doc_b",
-        )
-        .where(jac >= JACCARD_THRESHOLD)
+        with_sizes(overlap(cand, sh), sh)
+        .where(jaccard() >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b")
     )
     # contract base endpoints to their frozen cluster label (delta ids
@@ -2285,28 +2127,14 @@ def _tuning_oracle() -> str:
     tags=["dedup", "metric"],
 )
 def dedup_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _CACHE_GENERATION.evict()
-    sh = (
-        _shingle_rows(spark, sf_dir)
-        .withColumn("h", md5_long32(F.col("s")))
+    sh = _slot_shingles(spark, sf_dir, hashed=True)
+    # exact ground truth via the lossless prefix-filter path
+    truth = _CACHE_GENERATION.adopt(
+        _jaccard_inter_frame(sh)
+        .where(jaccard() >= JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b")
         .persist()
     )
-    _CACHE_GENERATION.append(sh)
-
-    # exact ground truth via the lossless prefix-filter path
-    t = JACCARD_THRESHOLD - 1e-6
-    pc = _prefix_candidates(sh.select("doc_id", "s"), t)
-    inter = (
-        pc.join(sh.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), "s"), ["doc_b", "s"])
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    jac = F.round(
-        F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6
-    )
-    truth = inter.where(jac >= JACCARD_THRESHOLD).select("doc_a", "doc_b").persist()
-    _CACHE_GENERATION.append(truth)
     n_true = truth.agg(F.count("*").alias("n_true"))
 
     sig = _minhash_sig(sh).cache()
@@ -2314,38 +2142,7 @@ def dedup_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = None
     for bands, rows in BAND_CONFIGS:
-        banded = sig.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band_id"),
-                            F.md5(
-                                F.concat_ws(
-                                    ",",
-                                    *[
-                                        F.element_at("sig", b * rows + r + 1)
-                                        for r in range(rows)
-                                    ],
-                                )
-                            ).alias("band_sig"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("band"),
-        ).select("doc_id", "band.band_id", "band.band_sig")
-        cand = (
-            banded.alias("a")
-            .join(banded.alias("b"), ["band_id", "band_sig"])
-            .where(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .distinct()
-        )
+        cand = band_pairs(_band_frame(sig, bands, rows))
         nc = cand.agg(F.count("*").alias("n_candidates"))
         nh = cand.join(truth, ["doc_a", "doc_b"], "semi").agg(
             F.count("*").alias("n_hit")
@@ -2435,57 +2232,12 @@ def dedup_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=["dedup", "metric"],
 )
 def dedup_simhash_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _CACHE_GENERATION.evict()
-    sh = _shingle_rows(spark, sf_dir).persist()
-    _CACHE_GENERATION.append(sh)
+    sh = _slot_shingles(spark, sf_dir)
     sig = _simhash_sig_frame(spark, sf_dir).persist()
     _CACHE_GENERATION.append(sig)
 
-    chunks = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk_id"),
-                        F.shiftright("simhash", 8 * (SIMHASH_CHUNKS - 1 - c))
-                        .bitwiseAND(F.lit(255))
-                        .alias("chunk_val"),
-                    )
-                    for c in range(SIMHASH_CHUNKS)
-                ]
-            )
-        ).alias("ch"),
-    ).select("doc_id", "simhash", "ch.chunk_id", "ch.chunk_val")
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    pairs = (
-        chunks.alias("a")
-        .join(chunks.alias("b"), ["chunk_id", "chunk_val"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-        .where(hamming <= SIMHASH_HAMMING_MAX)
-        .select("doc_a", "doc_b", hamming.cast("long").alias("hamming"))
-    )
-
-    t = JACCARD_THRESHOLD - 1e-6
-    pc = _prefix_candidates(sh, t)
-    inter = (
-        pc.join(sh.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), "s"), ["doc_b", "s"])
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    jac = F.round(
-        F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6
-    )
-    truth = inter.where(jac >= JACCARD_THRESHOLD).select(
+    pairs = _simhash_pairs(sig)
+    truth = _jaccard_inter_frame(sh).where(jaccard() >= JACCARD_THRESHOLD).select(
         "doc_a", "doc_b", F.lit(1).alias("t")
     )
     n_true = truth.agg(F.count("*").alias("total_true"))

@@ -566,7 +566,7 @@ def write_corpus_release(
     committer-idempotence tests.
     """
     global _WRITE_COUNT
-    from .relational import two_level_global_rank
+    from .relational import _RANK_SLOTS, two_level_global_rank
     from .training_prep import SHUFFLE_SEED, SHUFFLE_SHARDS
     from ..functions.text import md5_long32
 
@@ -642,9 +642,7 @@ def write_corpus_release(
     # the parquet (write-once memo), so the ranked frame can never be
     # needed again — release its persisted slot instead of leaking one
     # pinned frame per distinct release path for the app lifetime.
-    from .relational import _evict_previous_rank
-
-    _evict_previous_rank(f"corpus_release_write:{path}")
+    _RANK_SLOTS[f"corpus_release_write:{path}"].evict()
     return path
 
 

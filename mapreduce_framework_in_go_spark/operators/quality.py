@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources.tables import table
+from .setsim import jaccard
 
 _NUM_COLS = ["o_orderkey", "o_custkey", "o_totalprice"]
 _STR_COLS = ["o_orderstatus", "o_orderpriority"]
@@ -307,16 +308,13 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sa = sizes.select(F.col("source").alias("src_a"), F.col("n").alias("n_a"))
     sb = sizes.select(F.col("source").alias("src_b"), F.col("n").alias("n_b"))
-    jac = F.round(
-        F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6
-    )
     return (
         inter.join(F.broadcast(sa), "src_a")
         .join(F.broadcast(sb), "src_b")
         .select(
             "src_a", "src_b",
             F.col("n_common").cast("long").alias("n_common"),
-            jac.alias("jaccard"),
+            jaccard().alias("jaccard"),
         )
     )
 

@@ -37,9 +37,12 @@ inputs automatically).
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import GenerationSlot
 from ..registry import register
 from ..sources.tables import table
 
@@ -1059,27 +1062,18 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Global total-order sort with a scalable global rank (terasort pattern)
 # ---------------------------------------------------------------------------
 
-# one-generation cache for the ranked frame (same policy as
-# operators/dedup.py): the data branch and the offsets branch must see
-# the SAME materialized range partitioning — range split points come
-# from seeded per-RDD sampling, and two independently-planned
-# rangepartitioning exchanges could in principle disagree on partition
-# boundaries, silently corrupting global positions. Persisting pins one
-# materialization that both branches read.
-_RANK_CACHE: dict[str, DataFrame] = {}
-
-
-def _evict_previous_rank(slot: str) -> None:
-    prev = _RANK_CACHE.pop(slot, None)
-    if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
+# one generation slot per rank consumer for the ranked frame: the data
+# branch and the offsets branch must see the SAME materialized range
+# partitioning — range split points come from seeded per-RDD sampling,
+# and two independently-planned rangepartitioning exchanges could in
+# principle disagree on partition boundaries, silently corrupting
+# global positions. Persisting pins one materialization that both
+# branches read.
+_RANK_SLOTS: defaultdict[str, GenerationSlot] = defaultdict(GenerationSlot)
 
 
 def two_level_global_rank(
-    df: DataFrame, order_cols: list, slot: str = "default"
+    df: DataFrame, order_cols: list, slot: str
 ) -> DataFrame:
     """``df`` + an exact 1-based global ``pos`` under the total order
     ``order_cols`` — the terasort shape shared by ``global_sort_rank``
@@ -1103,9 +1097,8 @@ def two_level_global_rank(
             F.row_number().over(Window.partitionBy("pid").orderBy(*order_cols)),
         )
     )
-    _evict_previous_rank(slot)
-    ranked = ranked.persist()
-    _RANK_CACHE[slot] = ranked
+    _RANK_SLOTS[slot].evict()
+    ranked = _RANK_SLOTS[slot].adopt(ranked.persist())
     offsets = (
         ranked.groupBy("pid")
         .agg(F.count("*").alias("n"))

@@ -27,6 +27,7 @@ from ..cache import PLANS, GenerationSlot
 from ..functions.text import md5_long32, shingles_col, tokens_col
 from ..registry import register
 from ..sources.tables import table
+from .setsim import jaccard, overlap, with_sizes
 
 # BPE-ish pre-tokenizer: letter runs | digit runs | single non-space
 # symbol — the shape GPT-2-style byte-pair pre-splitting produces.
@@ -54,7 +55,7 @@ RK_MOD = 2_147_483_647
 # its OWN slot (not dedup._CACHE_GENERATION): a driver may build a
 # dedup frame and a winnow frame before collecting either, and a shared
 # slot would let each build unpersist the other's in-flight frame
-# (per-slot rule, see relational._RANK_CACHE).
+# (per-slot rule, see cache.py).
 _WINNOW_GENERATION = GenerationSlot()
 
 
@@ -636,33 +637,12 @@ def _winnow_pair_frames(
         .persist()
     )
     _WINNOW_GENERATION.append(sh)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    inter = (
-        cand.join(sh.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), "s"), ["doc_b", "s"])
-        .groupBy("doc_a", "doc_b", "n_shared_fp")
-        .agg(F.count("*").alias("n_common"))
-    )
-    pairs = (
-        inter.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_shared_fp",
-            F.col("n_common").cast("long").alias("n_common"),
-            F.round(
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
-        )
+    pairs = with_sizes(overlap(cand, sh), sh).select(
+        "doc_a",
+        "doc_b",
+        "n_shared_fp",
+        F.col("n_common").cast("long").alias("n_common"),
+        jaccard().alias("jaccard"),
     )
     return cand, pairs, sh
 
@@ -722,7 +702,7 @@ def _winnow_recall_oracle() -> str:
     tags=["dedup", "metric"],
 )
 def dedup_winnow_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import JACCARD_THRESHOLD, _prefix_candidates
+    from .dedup import JACCARD_THRESHOLD, _jaccard_inter_frame
 
     cand, pairs, sh = _winnow_pair_frames(spark, sf_dir)
     # candidate volume counts the PRE-verify candidate set (matching
@@ -733,22 +713,11 @@ def dedup_winnow_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_verified")
     )
     # exact ground truth over the SAME persisted shingle frame (no
-    # second eviction/persist cycle): lossless prefix-filter candidates
-    # + candidate-restricted intersection, the _jaccard_inter_frame
-    # computation inlined against our sh
-    ex = (
-        _prefix_candidates(sh, JACCARD_THRESHOLD - 1e-6)
-        .join(sh.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), "s"), ["doc_b", "s"])
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    jac = F.round(
-        F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-        6,
-    )
-    n_true = ex.where(jac >= JACCARD_THRESHOLD).agg(
-        F.count("*").alias("n_true")
+    # second eviction/persist cycle)
+    n_true = (
+        _jaccard_inter_frame(sh)
+        .where(jaccard() >= JACCARD_THRESHOLD)
+        .agg(F.count("*").alias("n_true"))
     )
     return (
         n_cand.crossJoin(F.broadcast(n_ver))

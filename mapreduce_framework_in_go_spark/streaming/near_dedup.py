@@ -51,13 +51,13 @@ from ..operators.dedup import (
     DELTA_MOD,
     DELTA_REM,
     JACCARD_THRESHOLD,
-    LSH_BANDS,
-    LSH_ROWS,
     MH_A,
     MH_B,
     MH_P,
     MINHASH_K,
+    _band_structs,
 )
+from ..operators.setsim import jaccard
 
 VERDICT_SCHEMA = T.StructType(
     [
@@ -195,28 +195,7 @@ def near_dedup_stream(
         "s_arr",
         "n_a",
         F.explode_outer(
-            F.when(
-                F.col("n_a") > 0,
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band_id"),
-                            F.md5(
-                                F.concat_ws(
-                                    ",",
-                                    *[
-                                        F.element_at(
-                                            "sig", b * LSH_ROWS + r + 1
-                                        )
-                                        for r in range(LSH_ROWS)
-                                    ],
-                                )
-                            ).alias("band_sig"),
-                        )
-                        for b in range(LSH_BANDS)
-                    ]
-                ),
-            )
+            F.when(F.col("n_a") > 0, _band_structs())
         ).alias("band"),
     )
     cands = (
@@ -239,11 +218,7 @@ def near_dedup_stream(
             "doc_id",
             "doc_b",
             "ex_dup_of",
-            F.round(
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
+            jaccard().alias("jaccard"),
         )
     )
     return cands.groupBy("doc_id").applyInPandasWithState(

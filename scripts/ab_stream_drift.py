@@ -2,7 +2,7 @@
 (VERDICT r12 ask #1: the stream_transition_matrix 2.65x bench drift).
 
 Runs N rounds; each round times one fixed-codegen calibration probe
-(bench.py's _calibrate workload) followed by one noop-write execution
+(bench.calibrate) followed by one noop-write execution
 of every target query — so every query sample is bracketed by
 environment measurements and a session-tier / contention story is
 measured, not guessed. Prints one JSON line with the full series.
@@ -25,6 +25,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import calibrate
 from mapreduce_framework_in_go_spark.registry import all_queries
 from mapreduce_framework_in_go_spark.session import get_spark
 
@@ -43,28 +44,23 @@ def main() -> None:
     load0 = round(os.getloadavg()[0], 2)
     spark = get_spark(app_name="ab-drift")
 
-    def calibrate() -> float:
-        t0 = time.perf_counter()
-        spark.range(1_000_000_000).selectExpr("sum(id % 7)").collect()
-        return round(time.perf_counter() - t0, 3)
-
     specs = all_queries()
     # same warmup as bench.py
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
     spark.range(100).mapInPandas(lambda it: it, schema="id long").count()
-    calibrate()  # codegen compile, untimed
+    calibrate(spark)  # codegen compile, untimed
 
     calib: list[float] = []
     series: dict[str, list[float]] = {n: [] for n in names}
     for _ in range(rounds):
-        calib.append(calibrate())
+        calib.append(calibrate(spark))
         for name in names:
             t0 = time.perf_counter()
             specs[name].fn(spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
             series[name].append(round(time.perf_counter() - t0, 3))
-    calib.append(calibrate())
+    calib.append(calibrate(spark))
 
     print(json.dumps({
         "sf_dir": sf_dir,

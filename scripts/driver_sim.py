@@ -30,6 +30,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import calibrate  # noqa: E402
 from tests.oracle import rows_canonical  # noqa: E402
 
 # A full run on a contended host must not clobber the committed
@@ -191,22 +192,15 @@ def main() -> int:
     load_avg_start = float(open("/proc/loadavg").read().split()[0])
     spark = get_spark(app_name="driver-sim", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
 
-    # Environment calibration (r12): a fixed whole-stage-codegen
-    # workload, timed at run start, end, and every CALIB_EVERY queries —
-    # identical work each probe, so its wall measures the environment
-    # + JIT tier, not the queries (see CALIB_SLACK above).
-    def _calibrate() -> float:
-        t0 = time.perf_counter()
-        spark.range(1_000_000_000).selectExpr("sum(id % 7)").collect()
-        return round(time.perf_counter() - t0, 3)
-
+    # Environment calibration (r12): bench.calibrate, timed at run
+    # start, end, and every CALIB_EVERY queries (see CALIB_SLACK above).
     # Two untimed warm runs (codegen compile + JIT settle): with one,
     # the first probe of an unsettled JVM read 0.78-0.96 s vs ~0.4
     # steady across four r13 runs (bench.py got the same fix), which
     # both misclassifies the session AND poisons the first wave bracket.
     spark.range(10_000_000).selectExpr("sum(id % 7)").collect()
-    _calibrate()
-    _calibrate()
+    calibrate(spark)
+    calibrate(spark)
     # Interleaved series, not just endpoints: r12 observed mid-run
     # contention WAVES (positions 56-139 of a full run at median
     # 3.5-4.6x reference, recovering to 1.75x after — with healthy
@@ -218,7 +212,7 @@ def main() -> int:
     # graded. ~0.6 s per probe, so the finer series costs ~6 s per
     # full run.
     CALIB_EVERY = 12
-    calib_series = [{"after_n": 0, "sec": _calibrate()}]
+    calib_series = [{"after_n": 0, "sec": calibrate(spark)}]
     con = duckdb.connect()
     for t in TABLE_NAMES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
@@ -239,7 +233,7 @@ def main() -> int:
             continue
         if len(engine_secs) - calib_series[-1]["after_n"] >= CALIB_EVERY:
             calib_series.append(
-                {"after_n": len(engine_secs), "sec": _calibrate()}
+                {"after_n": len(engine_secs), "sec": calibrate(spark)}
             )
         run_order.append(name)
         t0 = time.perf_counter()
@@ -291,7 +285,7 @@ def main() -> int:
                 f"committed clean-host {TIMES_NAME} is left untouched"
             )
         calib_series.append(
-            {"after_n": len(engine_secs), "sec": _calibrate()}
+            {"after_n": len(engine_secs), "sec": calibrate(spark)}
         )
         record = {
             "sf_dir": sf,

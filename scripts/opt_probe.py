@@ -26,6 +26,7 @@ REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
+from bench import calibrate
 from mapreduce_framework_in_go_spark.registry import all_queries
 from mapreduce_framework_in_go_spark.session import get_spark
 
@@ -50,13 +51,8 @@ def main() -> None:
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
     spark.range(100).mapInPandas(lambda it: it, schema="id long").count()
 
-    def calib() -> float:
-        t0 = time.perf_counter()
-        spark.range(1_000_000_000).selectExpr("sum(id % 7)").collect()
-        return round(time.perf_counter() - t0, 3)
-
-    calib()
-    print(f"calib: {calib()} (committed clean ref 0.38)")
+    calibrate(spark)
+    print(f"calib: {calibrate(spark)} (committed clean ref 0.38)")
 
     for name in args.names:
         if name not in specs:
@@ -94,7 +90,7 @@ def main() -> None:
             f"builds={[round(b, 3) for b in builds]}"
         )
         spark.sparkContext.setJobDescription(None)
-    print(f"calib end: {calib()}")
+    print(f"calib end: {calibrate(spark)}")
     spark.stop()
 
 

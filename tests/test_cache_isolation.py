@@ -246,3 +246,23 @@ def test_structured_emb_one_entry_per_dataset(spark, sf_dir):
     memoized label-blended corpus — never a second build and persist."""
     rel = similarity._structured_emb(spark, os.path.relpath(sf_dir))
     assert similarity._structured_emb(spark, os.path.abspath(sf_dir)) is rel
+
+
+def test_rank_slots_survive_each_other(spark, sf_dir):
+    """Two terasort-rank consumers built before either is collected:
+    each ranked frame lives in its own ``relational._RANK_SLOTS`` slot, so
+    the second build leaves the first persisted (one materialized
+    range partitioning for both of its branches), and both answers
+    equal their solo runs."""
+    from mapreduce_framework_in_go_spark.operators import relational
+    from mapreduce_framework_in_go_spark.registry import REGISTRY
+
+    names = ("global_sort_rank", "training_shuffle_order")
+    solo = {n: sorted(REGISTRY[n].fn(spark, sf_dir).collect()) for n in names}
+    built = {n: REGISTRY[n].fn(spark, sf_dir) for n in names}
+    ranked = list(relational._RANK_SLOTS[names[0]])
+    assert ranked and all(f.storageLevel.useMemory for f in ranked), (
+        "a sibling rank build evicted global_sort_rank's ranked frame"
+    )
+    for n in names:
+        assert sorted(built[n].collect()) == solo[n], n

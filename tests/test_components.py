@@ -14,7 +14,7 @@ from collections import defaultdict
 
 from pyspark.sql import functions as F
 
-from mapreduce_framework_in_go_spark.operators import dedup
+from mapreduce_framework_in_go_spark.operators import dedup, setsim
 from mapreduce_framework_in_go_spark.registry import all_queries
 
 from .conftest import SF_DIR_T2
@@ -151,7 +151,7 @@ def test_prefix_filter_prunes_boilerplate_corpus(spark):
         .count()
     )
     assert shared == n * (n - 1) // 2  # naive join would see every pair
-    cands = dedup._prefix_candidates(sh, dedup.JACCARD_THRESHOLD - 1e-6)
+    cands = setsim.prefix_candidates(sh, dedup.JACCARD_THRESHOLD - 1e-6)
     assert cands.count() == 0
 
 
@@ -170,7 +170,7 @@ def test_prefix_filter_keeps_true_near_dups(spark):
     sh = dedup._shingle_rows_from(docs)
     got = {
         (r.doc_a, r.doc_b)
-        for r in dedup._prefix_candidates(
+        for r in setsim.prefix_candidates(
             sh, dedup.JACCARD_THRESHOLD - 1e-6
         ).collect()
     }
@@ -340,8 +340,8 @@ def test_positional_filter_lossless_and_pruning(spark):
     reaches the exact-intersection join."""
     sh = dedup._shingle_rows(spark, SF_DIR_T2)
     t = dedup.JACCARD_THRESHOLD - 1e-6
-    with_pos = dedup._prefix_candidates(sh, t, positional=True)
-    without = dedup._prefix_candidates(sh, t, positional=False)
+    with_pos = setsim.prefix_candidates(sh, t, positional=True)
+    without = setsim.prefix_candidates(sh, t, positional=False)
     n_with, n_without = with_pos.count(), without.count()
     assert n_with < n_without, (n_with, n_without)
     # losslessness: the surviving TRUE pairs are identical
@@ -351,6 +351,30 @@ def test_positional_filter_lossless_and_pruning(spark):
     }
     kept = {(r.doc_a, r.doc_b) for r in with_pos.collect()}
     assert truth <= kept
+
+
+def test_exact_truth_counts_agree_across_queries(spark):
+    """Every exact-Jaccard ground truth is one computation
+    (``dedup._jaccard_inter_frame``): the true-pair count of the four
+    sketch metrics must equal the row count of dedup_ngram_jaccard, on
+    the smallest dataset with planted near-dup pairs."""
+
+    def rows(name):
+        return SPECS[name].fn(spark, SF_DIR_T2).collect()
+
+    n_ngram = len(rows("dedup_ngram_jaccard"))
+    (lsh,) = rows("dedup_lsh_recall")
+    (winnow,) = rows("dedup_winnow_recall")
+    band_true = {r.n_true for r in rows("dedup_band_tuning")}
+    # total_true is cum_recall's denominator: the last (widest
+    # hamming) row's recall is sum(n_true_pairs) / total_true
+    sim = sorted(rows("dedup_simhash_tuning"), key=lambda r: r.hamming)
+    assert sim[-1].cum_recall > 0
+    sim_true = round(sum(r.n_true_pairs for r in sim) / sim[-1].cum_recall)
+    assert n_ngram > 0
+    assert (lsh.n_true, winnow.n_true, band_true, sim_true) == (
+        n_ngram, n_ngram, {n_ngram}, n_ngram
+    )
 
 
 def test_containment_positional_filter_lossless(spark):
